@@ -42,3 +42,11 @@ def clean_name(c: Column | str) -> Column:
 def flag_as_int(cond: Column) -> Column:
     """Boolean comparison → 0/1 int ((a>b).astype(int), gold_war:145)."""
     return F.when(cond, 1).otherwise(0)
+
+
+def sql_ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier, for helpers that build
+    expressions as SQL strings: a column called ``my text``, ``a.b`` or
+    ``select`` parses as that one top-level column (embedded backticks
+    are doubled)."""
+    return "`" + name.replace("`", "``") + "`"

@@ -14,6 +14,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..functions import sql_ident
 from .materialize import lineage_cut
 
 N_MINHASH = 16  # signature length
@@ -165,8 +167,9 @@ def _minhash_cols(x_col: str = "gx") -> list[Column]:
     Catalyst tree (int literals < 2^31 parse as INT exactly like F.lit;
     the prime > 2^31 parses as BIGINT; promotions match — pinned by
     tests/test_round14_opt.py::test_minhash_sql_exprs_match_column_form)."""
+    x = sql_ident(x_col)
     return [
-        F.expr(f"min(({a} * {x_col} + {b}) % {MINHASH_PRIME}) AS h{i}")
+        F.expr(f"min(({a} * {x} + {b}) % {MINHASH_PRIME}) AS h{i}")
         for i, (a, b) in enumerate(MINHASH_COEFFS)
     ]
 
@@ -184,17 +187,18 @@ def gram_rows(
     on the construction path of every shingle-based operator including
     the per-micro-batch streaming bodies. Trees are identical to the old
     Column form (pinned by test_round14_opt)."""
-    norm = f"regexp_replace(lower(trim({text_col})), '\\\\s+', ' ')"
+    id_q = sql_ident(id_col)
+    norm = f"regexp_replace(lower(trim({sql_ident(text_col)})), '\\\\s+', ' ')"
     words = df.selectExpr(
-        id_col, f"posexplode(split({norm}, ' ')) AS (pos, w)"
+        id_q, f"posexplode(split({norm}, ' ')) AS (pos, w)"
     )
     parts = ["w AS _p0"] + [
-        f"lead(w, {j}) OVER (PARTITION BY {id_col} ORDER BY pos) AS _p{j}"
+        f"lead(w, {j}) OVER (PARTITION BY {id_q} ORDER BY pos) AS _p{j}"
         for j in range(1, n)
     ]
-    grams = words.selectExpr(id_col, *parts).filter(f"_p{n - 1} IS NOT NULL")
+    grams = words.selectExpr(id_q, *parts).filter(f"_p{n - 1} IS NOT NULL")
     gram = "concat_ws(' ', " + ", ".join(f"_p{j}" for j in range(n)) + ")"
-    return grams.selectExpr(id_col, f"{gram} AS gram")
+    return grams.selectExpr(id_q, f"{gram} AS gram")
 
 
 def minhash_signatures(
@@ -294,6 +298,21 @@ def near_dup_survivors(
     return df.join(losers, id_col, "left_anti")
 
 
+# Largest cut pair count resolved on the driver (see dedup_clusters). On
+# chain and random graphs of 1e3..1e6 pairs (4 cores) the driver path beat
+# the distributed rounds at every size, 10-20x, so driver memory sets the
+# bound, not a speed crossover: under a 1 GB driver heap 2e6 pairs ran in
+# 5-11 s, and 4e6 pairs ran the JVM out of heap while serializing the
+# result's one task. This keeps 8x headroom below that; the collected id
+# arrays and the result are a few MB.
+DRIVER_CC_MAX_PAIRS = 500_000
+
+
+class NullPairIdError(ValueError):
+    """A pair row given to dedup_clusters has a NULL id: a NULL is not a
+    node, and neither path can place it in a component."""
+
+
 def dedup_clusters(
     pairs: DataFrame,
     id_col_a: str = "id_a",
@@ -301,44 +320,112 @@ def dedup_clusters(
     max_iter: int = 20,
 ) -> DataFrame:
     """Connected components over the near-dup pair graph → (doc_id,
-    canonical_id), canonical = min id in the component.
+    canonical_id), canonical = min id in the component. Output columns
+    take the (common) type of the two id columns.
 
-    Iterative min-label propagation with POINTER DOUBLING: each round every
-    node adopts the min label among itself and its neighbors, then
-    compresses one hop through the label table (label := label(label)) —
-    the classic pointer-jumping step that turns O(diameter) convergence
-    into O(log diameter). On a chain-shaped component of 1000 nodes that is
-    ~10 rounds instead of ~1000; each round is two joins + one aggregation,
-    the standard large-graph pattern when a true graph engine isn't
-    warranted.
+    The pair ids are cut once (``lineage_cut``) and counted in the job
+    that materializes the cut; the count picks the path, so pair
+    generation runs exactly once either way:
+
+    - up to ``DRIVER_CC_MAX_PAIRS`` pairs: one collect of the cut, exact
+      components in numpy (:func:`_components_np`), one
+      ``createDataFrame`` coalesced to a single partition (the result is
+      at most 2 × the threshold rows — far below one advisory partition;
+      without the coalesce the Arrow slices would become one sink file
+      each). No per-round jobs, and ``max_iter`` does not apply.
+    - above it: distributed min-label propagation with pointer doubling
+      (:func:`_components_spark`), one job per round, at most
+      ``max_iter`` rounds.
+
+    Raises :class:`NullPairIdError` if any pair id is NULL.
     """
+    ids = pairs.select(F.col(id_col_a).alias("a"), F.col(id_col_b).alias("b"))
+    # Lazy cut fused with the size probe: the probe's job materializes the
+    # cut and counts it in one pass over the pair plan.
+    cut = ids.transform(lambda d: lineage_cut(d, eager=False))
+    n_pairs, n_null = cut.agg(
+        F.count(F.lit(1)),
+        F.count_if(F.col("a").isNull() | F.col("b").isNull()),
+    ).collect()[0]
+    if n_null:
+        raise NullPairIdError(
+            f"dedup_clusters: {n_null} of {n_pairs} pairs have a NULL "
+            f"{id_col_a}/{id_col_b}"
+        )
+    if n_pairs <= DRIVER_CC_MAX_PAIRS:
+        return _components_driver(cut)
+    return _components_spark(cut, max_iter)
+
+
+def _components_np(a, b):
+    """Exact connected components of the edge list (a[i], b[i]) → (node,
+    min node of its component), nodes sorted. Ids are mapped to their
+    rank among the distinct ids (``np.unique``), so "min rank" is "min
+    id" for any orderable type. Each round hooks both ends of every edge
+    onto the smaller of their two labels (``np.minimum.at``, both
+    directions), then pointer-jumps (``lab = lab[lab]``) until every
+    node points at its root. Labels only decrease and always name a node
+    of the same component, so the loop stops exactly when every edge
+    joins equal labels — the component minimum."""
+    import numpy as np
+
+    nodes, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+    ea, eb = inv[: len(a)], inv[len(a) :]
+    lab = np.arange(len(nodes))
+    while True:
+        prev = lab.copy()
+        la, lb = lab[ea], lab[eb]
+        np.minimum.at(lab, la, lb)
+        np.minimum.at(lab, lb, la)
+        while True:
+            jumped = lab[lab]
+            if np.array_equal(jumped, lab):
+                break
+            lab = jumped
+        if np.array_equal(lab, prev):
+            return nodes, nodes[lab]
+
+
+def _components_driver(cut: DataFrame) -> DataFrame:
+    """One collect of the cut pairs → :func:`_components_np` → one
+    single-partition DataFrame."""
+    import pandas as pd
+    from pyspark.sql.types import StructField, StructType
+
+    # the type the distributed path's (a,b)/(b,a) explode widens both ids to
+    id_type = cut.select(F.array("a", "b")).schema[0].dataType.elementType
+    pdf = cut.toPandas()
+    nodes, canon = _components_np(pdf["a"].to_numpy(), pdf["b"].to_numpy())
+    schema = StructType(
+        [StructField("doc_id", id_type), StructField("canonical_id", id_type)]
+    )
+    return cut.sparkSession.createDataFrame(
+        pd.DataFrame({"doc_id": nodes, "canonical_id": canon}), schema
+    ).coalesce(1)
+
+
+def _components_spark(cut: DataFrame, max_iter: int) -> DataFrame:
+    """Iterative min-label propagation with POINTER DOUBLING over the cut
+    (a, b) pairs: each round every node adopts the min label among itself
+    and its neighbors, then compresses one hop through the label table
+    (label := label(label)) — the classic pointer-jumping step that turns
+    O(diameter) convergence into O(log diameter). On a chain-shaped
+    component of 1000 nodes that is ~10 rounds instead of ~1000; each
+    round is two joins + one aggregation, the standard large-graph
+    pattern when a true graph engine isn't warranted."""
     edges = (
-        # Both directions from ONE scan: the old
-        # pairs.unionByName(pairs.swapped) consumed the caller's whole
-        # pair-generation plan twice before the checkpoint could cut it
-        # (measured: the PassJoin candidate join's partitions each read
-        # twice inside one fat stage — 6.6s max task at sf1.0*, 2x the
-        # balanced stage). The explode emits (a,b) and (b,a) per pair in
-        # a single pass.
-        pairs.select(
+        cut.select(
             F.explode(
                 F.array(
-                    F.struct(
-                        F.col(id_col_a).alias("a"), F.col(id_col_b).alias("b")
-                    ),
-                    F.struct(
-                        F.col(id_col_b).alias("a"), F.col(id_col_a).alias("b")
-                    ),
+                    F.struct(F.col("a"), F.col("b")),
+                    F.struct(F.col("b").alias("a"), F.col("a").alias("b")),
                 )
             ).alias("_e")
         )
         .select("_e.a", "_e.b")
         .distinct()
-        # Materialize ONCE: every round joins against edges, and without a
-        # cut each round re-executes the caller's whole pair-generation
-        # plan (for semantic/minhash pairs that is the expensive part —
-        # measured 3x the total wall at sf0.1). The edge list is the
-        # (id, id) pair table a production run would persist anyway.
+        # Materialize ONCE: every round joins against the edge list, and
+        # without a cut each round re-runs the explode + distinct shuffle.
         .transform(lineage_cut)
     )
     # Lazy cut: the fixpoint probe right below materializes the label table

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import sql_ident
 from .aggregates import decimal_avg
 from .windows import topk_per_group
 from .materialize import lineage_cut
@@ -2819,6 +2820,19 @@ def semantic_dedup_oracle_sql(
 # chain of pairs) makes the quality claim a gated number instead of a cite.
 
 
+def _attribute_sql(col: Column) -> str:
+    """Quoted SQL name of a bare attribute Column such as
+    ``F.col("my text")``; raises ValueError for any other expression."""
+    node = col._jc.node()
+    if node.getClass().getSimpleName() != "UnresolvedAttribute":
+        raise ValueError(
+            f"expected a bare column reference, got {col._jc.toString()!r}; "
+            "pass the column name instead"
+        )
+    parts = node.nameParts()
+    return ".".join(sql_ident(parts.apply(i)) for i in range(parts.size()))
+
+
 def jl_project(vec: Column | str, planes: list[list[float]]) -> Column:
     """k-dim signed-random projection of a vector column: one sequential
     +-1 fold per output dim (same IEEE order as the bucket kernel).
@@ -2828,9 +2842,10 @@ def jl_project(vec: Column | str, planes: list[list[float]]) -> Column:
     ~1,100 py4j round trips, ~2 s of driver wall per call. The weights
     are exactly ±1.0 (seeded_hyperplanes), so the `1.0D` / `-1.0D` SQL
     literals are the same IEEE doubles F.lit produced; the lambda fold
-    order is unchanged. Accepts the column NAME (preferred) or any
-    Column whose SQL rendering is a bare attribute reference."""
-    vec_expr = vec if isinstance(vec, str) else vec._jc.toString()
+    order is unchanged. Accepts the column NAME (preferred) or a Column
+    that is a bare attribute reference (``F.col(...)``); any other Column
+    raises ValueError, since its rendering is not parseable SQL."""
+    vec_expr = sql_ident(vec) if isinstance(vec, str) else _attribute_sql(vec)
     projs = []
     for plane in planes:
         arr = ", ".join(f"{w!r}D" for w in plane)

@@ -137,8 +137,8 @@ def compact_partitions(
 
     df = spark.read.format(fmt).load(path)
     # size on disk AND live-partition count from ONE driver-side walk
-    # (metadata only — never data): a leaf directory holding at least one
-    # data file IS a live partition (dynamic overwrite keeps live
+    # (metadata only — never data): a key=value directory holding at least
+    # one data file IS a live partition (dynamic overwrite keeps live
     # partitions' files; a stale emptied dir has none), and NULL keys
     # land in __HIVE_DEFAULT_PARTITION__ dirs just like distinct() counts
     # them. The old df.select(partition_cols).distinct().count() was a
@@ -151,10 +151,15 @@ def compact_partitions(
         total_bytes += sum(
             os.path.getsize(os.path.join(root, f)) for f in data_files
         )
-        if data_files and root != path:
+        if data_files and "=" in os.path.basename(root):
             part_dirs.add(root)
-    n_parts = max(1, len(part_dirs))  # floor guards a degenerate flat dir
-    per_part = total_bytes / max(n_parts, 1)
+    if part_dirs:
+        n_parts = len(part_dirs)
+    else:
+        # flat, not-yet-hive directory (a streaming sink's first
+        # compaction): the keys live only in the rows, so count them
+        n_parts = max(1, df.select(*partition_cols).distinct().count())
+    per_part = total_bytes / n_parts
     files_per_part = max(1, math.ceil(per_part / target_file_bytes))
     # Shuffle on (partition cols + within-partition salt), not the partition
     # cols alone: hashing only the partition key sends every row of a

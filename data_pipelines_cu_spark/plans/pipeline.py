@@ -21,9 +21,9 @@ single-Spark-app world:
 
 Stages must be idempotent and side-effect-free except their sink — the
 atomicity lesson of lecture3/10_non_atomic_send.py vs 11_atomic_send.py.
-Independent ready stages are submitted concurrently (thread pool → Spark
-scheduler pools), mirroring Airflow's parallel task execution
-(tutorial2:335).
+Independent ready stages are submitted concurrently from a thread pool,
+mirroring Airflow's parallel task execution (tutorial2:335); their Spark
+jobs share the session's default scheduler pool.
 """
 
 from __future__ import annotations

@@ -1463,11 +1463,15 @@ def doc_packed_sequences(spark, sf_dir):
 def dedup_cluster_assignment(spark, sf_dir):
     """Connected-components canonicalization over the near-dup pair graph.
 
-    Spark side: iterative min-label propagation (one join + one agg per
-    round, lineage truncated via localCheckpoint) — the scalable pattern
-    for 100 TB dup graphs where transitive closure is infeasible. Oracle:
-    DuckDB recursive-CTE transitive closure (fine at sf0.01 where the
-    pair graph is tiny), so the gate hash-checks cluster assignments."""
+    Spark side: dedup_clusters cuts the pair ids once and picks its path
+    from their count — a pair graph this small is collected once and
+    resolved exactly on the driver (numpy min-label + pointer jumping);
+    a graph above DRIVER_CC_MAX_PAIRS runs the distributed min-label
+    rounds (one join + one agg per round, lineage cut per round), the
+    scalable pattern for 100 TB dup graphs where transitive closure is
+    infeasible. Oracle: DuckDB recursive-CTE transitive closure (fine at
+    sf0.01 where the pair graph is tiny), so the gate hash-checks cluster
+    assignments."""
     d = _t(spark, sf_dir, "documents")
     pairs = dd.ngram_jaccard_pairs(d, block_col="lang", threshold=0.5)
     return dd.dedup_clusters(pairs)
@@ -4415,8 +4419,8 @@ _SEMANTIC_PAIRS_SQL = sim.semantic_dedup_oracle_sql(
 )
 def semantic_dup_clusters_q(spark, sf_dir):
     """Connected components over the SemDeDup pair graph → canonical vector
-    per semantic-duplicate group. Same O(diameter) min-label propagation as
-    the text dup graph; the oracle closes the graph with a recursive CTE."""
+    per semantic-duplicate group. Same dedup_clusters components as the
+    text dup graph; the oracle closes the graph with a recursive CTE."""
     pairs = sim.semantic_dedup_pairs(
         _t(spark, sf_dir, "embeddings"), threshold=0.3, lloyd_iters=2,
         target_cluster_size=64,

@@ -542,3 +542,45 @@ def test_expectations_catch_injected_violations(spark):
         ex.fk_expectation(clean, "fk", parent, "pk", "fk_parent"),
     ]).collect()
     assert all(r.passed == 1 and r.n_violations == 0 for r in rep2)
+
+
+def test_sql_string_builders_quote_identifiers(spark):
+    """gram_rows, _minhash_cols and jl_project build expressions as SQL
+    strings; a column named `my text` must resolve as that one column,
+    as F.col would, and jl_project must refuse a Column that is not a
+    bare column reference instead of splicing its rendering into SQL."""
+    import pytest
+
+    from data_pipelines_cu_spark.operators import dedup as dd
+    from data_pipelines_cu_spark.operators import similarity as sim
+
+    docs = spark.createDataFrame(
+        [(1, "The quick  brown fox"), (2, "a b c")],
+        "`my id` long, `my text` string",
+    )
+    grams = dd.gram_rows(docs, "my text", "my id", 3)
+    assert grams.columns == ["my id", "gram"]
+    assert sorted(map(tuple, grams.collect())) == [
+        (1, "quick brown fox"),
+        (1, "the quick brown"),
+        (2, "a b c"),
+    ]
+
+    gx = grams.select("my id", dd._base_hash32("gram").alias("g x"))
+    sigs = gx.groupBy("my id").agg(*dd._minhash_cols("g x"))
+    ref = gx.groupBy("my id").agg(
+        *[
+            F.min((F.lit(a) * F.col("g x") + F.lit(b)) % F.lit(dd.MINHASH_PRIME))
+            .alias(f"h{i}")
+            for i, (a, b) in enumerate(dd.MINHASH_COEFFS)
+        ]
+    )
+    assert sorted(map(tuple, sigs.collect())) == sorted(map(tuple, ref.collect()))
+
+    planes = sim.seeded_hyperplanes(n_bits=2, dim=3, seed=11)
+    vecs = spark.createDataFrame([([1.0, 2.0, 3.0],)], "`my vec` array<double>")
+    want = [sum(w * x for w, x in zip(plane, [1.0, 2.0, 3.0])) for plane in planes]
+    for vec in ("my vec", F.col("my vec")):
+        assert vecs.select(sim.jl_project(vec, planes).alias("p")).first().p == want
+    with pytest.raises(ValueError, match="bare column reference"):
+        sim.jl_project(F.reverse(F.col("my vec")), planes)

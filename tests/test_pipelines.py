@@ -271,6 +271,40 @@ def test_compact_partitions_splits_fat_partitions(spark, tmp_path):
     assert got.count() == 50_000
 
 
+def test_compact_partitions_sizes_a_flat_directory_by_its_keys(spark, tmp_path):
+    """First compaction of a flat (not yet key=value) directory: there
+    are no partition directories to count, so the per-partition size
+    must come from the number of distinct keys in the rows. Counting
+    the root as one partition sized every partition as the whole table
+    and wrote ~P x too many files each."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from data_pipelines_cu_spark.operators.upsert import compact_partitions
+
+    path = str(tmp_path / "flat")
+    spark.range(40_000).select(
+        (F.col("id") % 4).cast("string").alias("date"), F.col("id").alias("v")
+    ).repartition(8).write.parquet(path)
+    flat_bytes = sum(
+        os.path.getsize(os.path.join(path, f))
+        for f in os.listdir(path)
+        if f.endswith(".parquet")
+    )
+    # each of the 4 partitions holds ~1.5 targets -> 2 files each
+    compact_partitions(spark, path, ["date"], target_file_bytes=flat_bytes // 6)
+    per_part = {
+        root: sum(1 for f in fs if f.endswith(".parquet"))
+        for root, _d, fs in os.walk(path)
+        if root != path
+    }
+    assert len(per_part) == 4 and max(per_part.values()) <= 2, per_part
+    got = spark.read.parquet(path)
+    assert got.count() == 40_000
+    assert got.select("v").distinct().count() == 40_000
+
+
 def test_write_range_clustered_files_have_disjoint_ranges(spark, tmp_path):
     """Range clustering must yield per-file value ranges that do not
     overlap — the property parquet min/max skipping depends on."""
