@@ -142,15 +142,16 @@ def _path_stamp(path: str) -> tuple:
     stamp: tuple = (st.st_mtime_ns, st.st_size)
     if os.path.isdir(path):
         try:
-            children = tuple(
-                sorted(
-                    (e.name, e.stat().st_mtime_ns, e.stat().st_size)
-                    for e in os.scandir(path)
-                )
-            )
+            children = []
+            with os.scandir(path) as entries:
+                for e in entries:
+                    est = e.stat()
+                    children.append((e.name, est.st_mtime_ns, est.st_size))
         except OSError:
             return (None, None)
-        stamp = (*stamp, hash(children))
+        # the children tuple itself, not its hash: a hash collision would
+        # serve a stale handle for a rewritten table
+        stamp = (*stamp, tuple(sorted(children)))
     return stamp
 
 

@@ -14,6 +14,9 @@ buckets first.
 
 from __future__ import annotations
 
+import re
+from dataclasses import dataclass
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -421,9 +424,11 @@ def ivf_assign(
 # `.rdd` probe below is NOT job-free — under AQE, producing the final
 # RDD materializes upstream shuffle stages at call time — and the
 # post-shuffle layout is already spark.sql.shuffle.partitions wide, so
-# widening has nothing to fix. Checked textually on the optimized plan
-# (driver-side analysis only, never executes a stage).
-_WIDEN_BARRIER_NODES = (
+# widening has nothing to fix. Matched EXACTLY against each plan line's
+# node name (its first identifier) — a substring test would trip on
+# column names such as ``Joined`` or ``SortKey`` — on the optimized
+# plan (driver-side analysis only, never executes a stage).
+_WIDEN_BARRIER_NODES = frozenset({
     "Join",
     "Aggregate",
     "Window",
@@ -431,9 +436,13 @@ _WIDEN_BARRIER_NODES = (
     "Deduplicate",
     "Repartition",
     "RepartitionByExpression",
+    "RebalancePartitions",
     "Exchange",
     "GlobalLimit",
-)
+    "FlatMapGroupsInPandas",
+    "FlatMapCoGroupsInPandas",
+})
+_PLAN_NODE_NAME = re.compile(r"[A-Za-z_]\w*")
 
 
 def _widen_if_narrow(df: DataFrame) -> DataFrame:
@@ -456,7 +465,12 @@ def _widen_if_narrow(df: DataFrame) -> DataFrame:
         plan = df._jdf.queryExecution().optimizedPlan().toString()
     except Exception:  # noqa: BLE001 — planning hiccup: keep the plan as-is
         return df
-    if any(node in plan for node in _WIDEN_BARRIER_NODES):
+    nodes = {
+        m.group(0)
+        for line in plan.splitlines()
+        if (m := _PLAN_NODE_NAME.search(line))
+    }
+    if nodes & _WIDEN_BARRIER_NODES:
         return df
     try:
         if df.rdd.getNumPartitions() >= target:
@@ -833,16 +847,13 @@ def _seed_centroids(
     id_col: str,
     vec_col: str,
 ) -> list[tuple[int, list[float]]]:
-    """THE centroid-training rule for every index builder (float, SQ8,
-    PQ): deterministic seeds (the n lowest-id vectors) refined by the
-    order-independent Lloyd pass. One place, not three — a seeding or
-    refinement tweak replicated by hand would let a rebuilt index
-    silently disagree with the one it replaces. An empty seed set —
-    empty corpus after NULL-vector admission, or every id outside the
-    seed range — refuses loudly: continuing would write an empty/
-    garbage tree and return empty artifacts with no error anywhere
-    (measured: the SQ8 builder died later with an opaque 'exprs should
-    not be empty' assert, the PQ builder silently returned ([], []))."""
+    """THE centroid-training rule of the index build, whatever its codec:
+    deterministic seeds (the n lowest-id vectors) refined by the
+    order-independent Lloyd pass — a rebuilt index never silently
+    disagrees with the one it replaces. An empty seed set — empty corpus
+    after NULL-vector admission, or every id outside the seed range —
+    refuses loudly: continuing would write an empty/garbage tree and
+    return an empty artifact with no error anywhere."""
     seeds = corpus.filter(F.col(id_col) < n_centroids).select(id_col, vec_col)
     seed_rows = [(r[0], [float(x) for x in r[1]]) for r in seeds.collect()]
     if not seed_rows:
@@ -858,6 +869,343 @@ def _seed_centroids(
     )
 
 
+PQ_M = 4
+PQ_K = 16
+
+
+def _pq_geometry(codebooks: list[tuple[int, int, list[float]]]) -> tuple[int, int]:
+    """(m, dsub) derived from the frozen codebook artifact itself — the
+    artifact is the only truth about the PQ geometry; every consumer
+    derives from it instead of trusting caller-passed parameters that
+    can silently disagree."""
+    m = 1 + max(j for j, _, _ in codebooks)
+    dsub = len(codebooks[0][2])
+    return m, dsub
+
+
+def _pq_encode(
+    vectors: DataFrame,
+    cent: DataFrame,
+    m: int,
+    dsub: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """(id, _vkey, codes): each vector's m one-byte PQ codes under a
+    FROZEN codebook table (j, cell, cv) — the encode half of the PQ
+    codec. Assignment is argmin squared-L2 per (row, subspace) against
+    the broadcast m*k codebook (ties: lowest cell), codes ordered by
+    subspace. Rows are keyed by (id, vector-as-string), NOT id alone: a
+    batch carrying the same id twice with different vectors must encode
+    each vector's own codes — an id-keyed argmin would mix subspaces
+    across the duplicates into a chimera code vector equal to neither
+    input. Callers join the result back on BOTH keys and drop ``_vkey``."""
+    src = vectors.select(
+        id_col, vec_col, F.col(vec_col).cast("string").alias("_vkey")
+    )
+    sub = _pq_subvecs(
+        src, m=m, dsub=dsub, id_col=id_col, vec_col=vec_col, carry=("_vkey",)
+    )
+    return (
+        _pq_assign_codes(sub, cent, keys=(id_col, "_vkey"))
+        .groupBy(id_col, "_vkey")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("j", "cell"))),
+                lambda x: x["cell"],
+            ).alias("pq_codes")
+        )
+    )
+
+
+def _pq_decode_expr(codebooks: list[tuple[int, int, list[float]]]):
+    """THE PQ reconstruction rule (the PQ codec's decode — compaction,
+    retrain, drift and the query path all score the vector it yields):
+    returns a Column fn mapping an m-element code array to its flattened
+    reconstruction via LITERAL per-subspace lookup arrays — element_at
+    on an m*k-entry constant, row-local, NO shuffle (the explode +
+    codebook-join + regroup alternative pays an exchange of m× the
+    probed rows on the serving hot path). A code that is NULL,
+    negative, out of range, or pointing at a cell absent from the
+    codebook yields a NULL reconstruction for the WHOLE row (flatten
+    propagates the NULL part): queries score it as NULL cosine (never
+    outranks a real row), compaction and retrain refuse it loudly —
+    corruption surfaces, consistently, instead of being laundered
+    through a fabricated substitute cell."""
+    cb: dict[int, dict[int, list[float]]] = {}
+    for j, c, cv in codebooks:
+        cb.setdefault(j, {})[c] = cv
+    m = 1 + max(cb)
+
+    def decode(codes: Column) -> Column:
+        parts = []
+        for j in range(m):
+            cells = cb.get(j, {})
+            kmax = max(cells)
+            lut = F.array(
+                *[
+                    F.array(*[F.lit(float(x)) for x in cells[c]])
+                    if c in cells
+                    else F.lit(None).cast("array<double>")
+                    for c in range(kmax + 1)
+                ]
+            )
+            code = F.element_at(codes, j + 1)
+            parts.append(
+                F.when(
+                    (code >= 0) & (code <= kmax),
+                    F.element_at(lut, code + F.lit(1)),
+                )
+            )
+        return F.flatten(F.array(*parts))
+
+    return decode
+
+
+def _pq_codebook_df(spark, codebooks: list[tuple[int, int, list[float]]]):
+    """The frozen codebook artifact ((j, cell, cv) rows, m*k total) as a
+    broadcast-ready DataFrame."""
+    return spark.createDataFrame(
+        [(j, c, [float(x) for x in cv]) for j, c, cv in sorted(codebooks)],
+        "j int, cell int, cv array<double>",
+    )
+
+
+_PAYLOAD = {"sq8": "codes", "pq": "pq_codes"}
+_LABEL = {"float": "a float", "sq8": "an SQ8", "pq": "a PQ"}
+
+
+@dataclass(frozen=True)
+class Codec:
+    """The payload codec of a persisted IVF index, as a VALUE: every
+    lifecycle operator (build, upsert, compact, query, drift report,
+    retrain, and the streaming ingest/serving jobs) takes one and runs
+    the same path for all three codecs. It holds the frozen artifact —
+    nothing for ``float`` (the module's ``FLOAT``), per-dimension
+    ``bounds`` (mn, mx) for ``sq8``, the m*k ``codebooks`` rows for
+    ``pq`` — and from it derives the stored payload column, the encode
+    step, the decode (float view) expression and the tree schema check.
+    The artifact shares the centroids' lifetime discipline: a retrain
+    mints a new codec, and mixing artifacts across builds corrupts
+    silently, so the caller persists it next to the centroids.
+
+    Build one from a frozen artifact with :meth:`sq8` / :meth:`pq`, or
+    learn it from a corpus with :meth:`learn_sq8` / :meth:`learn_pq`."""
+
+    kind: str = "float"
+    bounds: tuple[list[float], list[float]] | None = None
+    codebooks: list[tuple[int, int, list[float]]] | None = None
+
+    @classmethod
+    def sq8(cls, bounds: tuple[list[float], list[float]]) -> Codec:
+        """Scalar quantization under frozen per-dimension (mn, mx) bounds:
+        rows store int8-range CODES (array<int>, 0..255 — parquet
+        bit-packs them to ~1 byte/dim vs 4 for float32). Values outside
+        the bounds clamp to 0/255 — the saturation trade; a drifted value
+        range is one more signal the retrain refreshes."""
+        return cls("sq8", bounds=bounds)
+
+    @classmethod
+    def pq(cls, codebooks: list[tuple[int, int, list[float]]]) -> Codec:
+        """Product quantization under frozen (j, cell, cv) codebooks: rows
+        store m one-byte codes (m=4 on 64-dim vectors = 16x fewer values
+        than float32). The geometry (m, dsub) is derived from the
+        codebooks alone (:func:`_pq_geometry`), never passed alongside."""
+        return cls("pq", codebooks=codebooks)
+
+    @classmethod
+    def learn_sq8(cls, corpus: DataFrame, vec_col: str = "embedding") -> Codec:
+        """Learn SQ8 bounds: per-dimension min/max over the non-NULL
+        corpus vectors (one aggregate, :func:`sq8_bounds`)."""
+        corpus = drop_null_vectors(corpus, vec_col)
+        dim_row = corpus.select(F.size(vec_col)).first()
+        dim = int(dim_row[0]) if dim_row else 0
+        if dim == 0:
+            raise ValueError(
+                "Codec.learn_sq8: corpus has no non-NULL vectors to learn "
+                "quantization bounds from — nothing to index"
+            )
+        b = sq8_bounds(corpus, vec_col=vec_col, dim=dim).first()
+        return cls.sq8(([float(x) for x in b["mn"]], [float(x) for x in b["mx"]]))
+
+    @classmethod
+    def learn_pq(
+        cls,
+        corpus: DataFrame,
+        m: int = PQ_M,
+        dsub: int = 16,
+        k: int = PQ_K,
+        lloyd_iters: int = 2,
+        id_col: str = "vec_id",
+        vec_col: str = "embedding",
+        seed_ids: list | None = None,
+    ) -> Codec:
+        """Learn PQ codebooks (:func:`pq_codebooks`: seeds are the k
+        lowest-id vectors, or ``seed_ids`` when the corpus is an index's
+        survivor set) over the non-NULL corpus vectors."""
+        cb_df = pq_codebooks(
+            drop_null_vectors(corpus, vec_col),
+            m=m,
+            dsub=dsub,
+            k=k,
+            lloyd_iters=lloyd_iters,
+            id_col=id_col,
+            vec_col=vec_col,
+            seed_ids=seed_ids,
+        )
+        codebooks = sorted(
+            (r["j"], r["cell"], [float(x) for x in r["cv"]])
+            for r in cb_df.collect()  # m*k rows — artifact, never corpus
+        )
+        if not codebooks:
+            raise ValueError(
+                "Codec.learn_pq: corpus has no non-NULL vectors to learn "
+                "codebooks from — nothing to index"
+            )
+        return cls.pq(codebooks)
+
+    @property
+    def quantized(self) -> bool:
+        return self.kind != "float"
+
+    @property
+    def dim(self) -> int:
+        """Vector dimension a quantized payload reconstructs to."""
+        if self.kind == "sq8":
+            return len(self.bounds[0])
+        m, dsub = _pq_geometry(self.codebooks)
+        return m * dsub
+
+    def payload(self, vec_col: str) -> str:
+        """The stored column: the vector itself for float, else the codes
+        — also the keep-last rule's same-wave tiebreak column."""
+        return _PAYLOAD.get(self.kind, vec_col)
+
+    def _sq8_lits(self) -> tuple[Column, Column]:
+        return tuple(F.array(*[F.lit(v) for v in b]) for b in self.bounds)
+
+    def view(self, vec_col: str, name: str, compaction: bool = False) -> Column:
+        """The float vector a tree row means, named ``name``: the stored
+        vector for float, the reconstruction (asymmetric scoring — the
+        query never quantizes) for a quantized tree. Compaction's SQ8
+        view casts each element to float, the cell-reassignment input
+        that path has always used; every other view keeps the doubles."""
+        if self.kind == "sq8":
+            v = sq8_decode(F.col("codes"), *self._sq8_lits())
+            if compaction:
+                v = F.transform(v, lambda x: x.cast("float"))
+        elif self.kind == "pq":
+            v = _pq_decode_expr(self.codebooks)(F.col("pq_codes"))
+        else:
+            v = F.col(vec_col)
+            if name == vec_col:
+                return v
+        return v.alias(name)
+
+    def encode(
+        self,
+        vectors: DataFrame,
+        cent_rows: list[tuple[int, list[float]]],
+        id_col: str,
+        vec_col: str,
+    ) -> DataFrame:
+        """(id, payload, cell) for incoming vectors. Cells are assigned
+        from the FULL-PRECISION vectors (quantization error must cost
+        recall at the re-ranking margin, not move vectors across cells);
+        only the stored payload is compressed. The PQ encode joins back
+        on (id, vector-string), so duplicate ids in one batch keep their
+        OWN codes and cells (see :func:`_pq_encode`)."""
+        assigned = ivf_assign_arrow(
+            vectors.select(id_col, vec_col), cent_rows, vec_col=vec_col
+        )
+        if self.kind == "sq8":
+            codes = sq8_codes(F.col(vec_col), *self._sq8_lits())
+            return assigned.select(id_col, codes.alias("codes"), "cell")
+        if self.kind == "pq":
+            m, dsub = _pq_geometry(self.codebooks)
+            encoded = _pq_encode(
+                vectors,
+                _pq_codebook_df(vectors.sparkSession, self.codebooks),
+                m=m, dsub=dsub, id_col=id_col, vec_col=vec_col,
+            )
+            return (
+                assigned.select(
+                    id_col, F.col(vec_col).cast("string").alias("_vkey"), "cell"
+                )
+                .join(encoded, [id_col, "_vkey"])
+                .drop("_vkey")
+            )
+        return assigned
+
+    def check(
+        self, columns: list[str], path: str, op: str, waves: bool = False
+    ) -> None:
+        """THE tree schema check, run before any read plan or write: the
+        tree's codec (``codes`` = SQ8, ``pq_codes`` = PQ, else float)
+        must be this codec — every mismatch fails fast with the missing
+        artifact named, instead of a quantized tree served through the
+        wrong decode or a wave of one codec landing in another's tree
+        (NULL payloads no later read surfaces). ``waves`` additionally
+        rejects a legacy cell-only tree: writing (cell, wave) partitions
+        into it would create a mixed layout no reader can open."""
+        tree = next((c for c, p in _PAYLOAD.items() if p in columns), "float")
+        passed = f"{_LABEL[self.kind]} codec was passed"
+        if tree != self.kind:
+            raise ValueError(f"{op}: " + {
+                "sq8": f"{path} is an SQ8 index (codes column) but {passed}"
+                " — pass its frozen quantization bounds as Codec.sq8(bounds)",
+                "pq": f"{path} is a PQ index (pq_codes column) but {passed}"
+                " — pass its frozen codebooks as Codec.pq(codebooks)",
+                "float": f"index at {path} is not {_LABEL[self.kind]} wave "
+                "index: it is a FLOAT tree but a quantization codec was "
+                "passed — wrong index path, or the tree was rebuilt under "
+                "a different codec",
+            }[tree])
+        if waves and "wave" not in columns:
+            raise ValueError(
+                f"{op}: index at {path} has no wave partition level "
+                "(pre-round-11 layout); rebuild it with build_ivf_index "
+                "before wave upserts — mixing partition layouts in one "
+                "path is unreadable"
+            )
+
+    def relearn(
+        self, survivors: DataFrame, lloyd_iters: int, id_col: str, vec_col: str
+    ) -> Codec:
+        """A fresh artifact of the same kind learned from an index's
+        survivor set (the retrain step): new bounds for SQ8; new
+        codebooks of the SAME (m, dsub, k) geometry for PQ, seeded from
+        the k lowest SURVIVING ids (the id < k rule of a fresh corpus
+        does not hold for survivors)."""
+        if self.kind == "sq8":
+            return Codec.learn_sq8(survivors, vec_col=vec_col)
+        if self.kind == "pq":
+            m, dsub = _pq_geometry(self.codebooks)
+            k = 1 + max(c for _, c, _ in self.codebooks)
+            seeds = survivors.select(id_col).orderBy(id_col).limit(k).collect()
+            return Codec.learn_pq(
+                survivors, m=m, dsub=dsub, k=k, lloyd_iters=lloyd_iters,
+                id_col=id_col, vec_col=vec_col, seed_ids=[r[0] for r in seeds],
+            )
+        return self
+
+
+FLOAT = Codec()
+
+
+def _write_tree(indexed: DataFrame, path: str) -> None:
+    """Write a whole (cell, wave)-partitioned tree. Static overwrite
+    pinned: a rebuild or compaction REPLACES the tree, so every old
+    (cell, wave) partition must go, not just the ones present in the new
+    data (the session default is dynamic, for the upsert paths)."""
+    (
+        indexed.write.partitionBy("cell", "wave")
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "static")
+        .parquet(path)
+    )
+
+
 def build_ivf_index(
     corpus: DataFrame,
     path: str,
@@ -866,10 +1214,12 @@ def build_ivf_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroids: list[tuple[int, list[float]]] | None = None,
+    codec: Codec = FLOAT,
 ) -> list[tuple[int, list[float]]]:
-    """Materialize the IVF inverted file: corpus vectors written as parquet
-    PARTITIONED BY their nearest-centroid cell, returning the (tiny)
-    centroid rows the caller persists alongside as index metadata.
+    """Materialize the IVF inverted file: corpus payloads (``codec``)
+    written as parquet PARTITIONED BY their nearest-centroid cell,
+    returning the (tiny) centroid rows the caller persists alongside as
+    index metadata, next to the codec's artifact.
 
     This is the production shape `cosine_topk_ivf` amortizes to: the
     centroid assign runs ONCE over the corpus, and every later query batch
@@ -878,7 +1228,9 @@ def build_ivf_index(
     BY I/O, not just by compute (`query_ivf_index` asserts PartitionFilters
     in its plan test). Same deterministic seeding + Lloyd refinement as
     `cosine_topk_ivf`, so a fresh index over the same corpus is
-    reproducible bit-for-bit.
+    reproducible bit-for-bit; passed ``centroids`` rebuild under the
+    FROZEN artifact instead (cell assignment is a pure function of
+    (vector, centroids)).
 
     NULL vectors are never ingested (the index admission rule the
     lifecycle gate's oracle mirrors): dropped here at entry, because a
@@ -886,26 +1238,13 @@ def build_ivf_index(
     opaque (0,)-dim numpy error."""
     corpus = drop_null_vectors(corpus, vec_col)
     if centroids is not None:
-        # rebuild/compact under FROZEN centroids: cell assignment is a
-        # pure function of (vector, centroids), so the index layout is
-        # reproducible without re-running the training loop
         cent_rows = sorted(centroids)
     else:
         cent_rows = _seed_centroids(
             corpus, n_centroids, lloyd_iters, id_col, vec_col
         )
-    indexed = ivf_assign_arrow(
-        corpus.select(id_col, vec_col), cent_rows, vec_col=vec_col
-    ).withColumn("wave", F.lit(0))
-    # static overwrite pinned: a REBUILD over an existing path must drop
-    # every old (cell, wave) partition, not just the ones present in the
-    # new data (the session default is dynamic for the upsert paths)
-    (
-        indexed.write.partitionBy("cell", "wave")
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .parquet(path)
-    )
+    indexed = codec.encode(corpus, cent_rows, id_col, vec_col)
+    _write_tree(indexed.withColumn("wave", F.lit(0)), path)
     return cent_rows
 
 
@@ -917,11 +1256,13 @@ def upsert_ivf_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     check_layout: bool = True,
+    codec: Codec = FLOAT,
 ) -> None:
     """Incremental wave append to a persisted IVF index under FROZEN
-    centroids — the serving-side reality a one-shot build ignores: new
-    vectors arrive for months while the centroid artifact stays fixed
-    (retraining centroids would move every existing cell assignment).
+    centroids and codec artifact — the serving-side reality a one-shot
+    build ignores: new vectors arrive for months while the artifacts
+    stay fixed (retraining centroids would move every existing cell
+    assignment).
 
     Each wave lands in its (cell, wave) partitions via dynamic
     partition overwrite, so a crashed-and-replayed ingest REPLACES its
@@ -937,18 +1278,15 @@ def upsert_ivf_index(
     :func:`compact_ivf_index` reconciles (documented staleness — the
     standard LSM/lakehouse trade: cheap upserts, periodic compaction).
 
-    A pre-round-11 index written without the wave partition level is
-    rejected loudly — writing (cell, wave) partitions into a cell-only
-    tree would create a mixed layout no reader can open (the streaming
-    wrapper and compaction already guard this; the batch write path
-    must too, or a direct call corrupts the index silently until some
-    later read fails). A missing path is fine: the first wave creates
-    the index and wave 0 stays an empty build namespace. The check reads
-    the index schema (one file listing + footer); a caller that has
-    already verified the layout for the index's lifetime — the streaming
-    wrapper checks once at wave-base pin time, then writes a wave per
-    micro-batch — passes ``check_layout=False`` to skip the per-call
-    listing.
+    The tree is checked before the write (:meth:`Codec.check`): a tree
+    of another codec, or a pre-round-11 index written without the wave
+    partition level, is rejected loudly and left untouched. A missing
+    path is fine: the first wave creates the index and wave 0 stays an
+    empty build namespace. The check reads the index schema (one file
+    listing + footer); a caller that has already verified the layout
+    for the index's lifetime — the streaming wrapper checks once at
+    wave-base pin time, then writes a wave per micro-batch — passes
+    ``check_layout=False`` to skip the per-call listing.
     """
     if wave < 1:
         raise ValueError(
@@ -966,19 +1304,35 @@ def upsert_ivf_index(
             existing_cols = new_vectors.sparkSession.read.parquet(path).columns
         except AnalysisException:
             existing_cols = None  # no index yet — this wave creates it
-        if existing_cols is not None and "wave" not in existing_cols:
-            raise ValueError(
-                f"upsert_ivf_index: index at {path} has no wave partition "
-                "level (pre-round-11 layout); rebuild it with "
-                "build_ivf_index before wave upserts — mixing partition "
-                "layouts in one path is unreadable"
-            )
+        if existing_cols is not None:
+            codec.check(existing_cols, path, "upsert_ivf_index", waves=True)
     from .upsert import upsert_partitions  # noqa: PLC0415
 
-    assigned = ivf_assign_arrow(
-        new_vectors.select(id_col, vec_col), sorted(centroids), vec_col=vec_col
-    ).withColumn("wave", F.lit(wave))
-    upsert_partitions(assigned, path, ["cell", "wave"])
+    assigned = codec.encode(new_vectors, sorted(centroids), id_col, vec_col)
+    upsert_partitions(
+        assigned.withColumn("wave", F.lit(wave)), path, ["cell", "wave"]
+    )
+
+
+def _refuse_corrupt_codes(view: DataFrame, codec: Codec, path: str, op: str) -> None:
+    """A quantized survivor whose codes fail to reconstruct to the
+    codec's dimension (corrupt/foreign codes, e.g. a wave replayed under
+    a retrained artifact) ABORTS the rewrite loudly before any write —
+    the query path scores such a row as NULL cosine (it never ranks),
+    but compaction would launder it under a fabricated cell into a
+    valid-looking wave 0, and a retrain's rebuild would silently drop
+    it (permanent data loss). One extra pass over the survivors'
+    ``_rv`` view; both rewrites are offline ops."""
+    n_bad = view.filter(
+        F.col("_rv").isNull() | (F.size("_rv") != codec.dim)
+    ).count()
+    if n_bad:
+        raise ValueError(
+            f"{op}: {n_bad} row(s) at {path} failed to reconstruct to "
+            f"{codec.dim} dims — corrupt or foreign codes (written under a "
+            "different bounds/codebook artifact?); refusing to rewrite "
+            "the index over them"
+        )
 
 
 def compact_ivf_index(
@@ -987,13 +1341,19 @@ def compact_ivf_index(
     centroids: list[tuple[int, list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    codec: Codec = FLOAT,
 ) -> None:
     """Compaction: collapse all waves to keep-last per id, REASSIGN every
-    survivor's cell from its (possibly updated) embedding, and rewrite
-    the index as a fresh wave 0 — after this, cross-cell staleness is
-    gone and the index equals a clean :func:`build_ivf_index` of the
+    survivor's cell from its (possibly updated) vector — for a quantized
+    tree its RECONSTRUCTION, the vector the query path scores, so
+    post-compact probe behavior is self-consistent — and rewrite the
+    index as a fresh wave 0. After this, cross-cell staleness is gone
+    and a float index equals a clean :func:`build_ivf_index` of the
     survivor set under the same frozen centroids (pinned by test).
-    Keep-last is (wave DESC, then embedding-bytes for a deterministic
+    Quantized payloads are carried through UNCHANGED (no decode →
+    re-encode round trip to accumulate quantization error), and corrupt
+    codes abort before any write (:func:`_refuse_corrupt_codes`).
+    Keep-last is (wave DESC, then payload bytes for a deterministic
     same-wave tiebreak); run it offline like the build — the rewrite is
     a plain overwrite, not a snapshot-isolated publish. A legacy index
     written before the wave partition level (cell-only layout) defaults
@@ -1011,23 +1371,28 @@ def compact_ivf_index(
     → new waves start at 1) and nothing older can replay. Resuming the
     OLD checkpoint after a compaction is the one sequence that corrupts
     silently."""
+    op = "compact_ivf_index"
+    raw = _read_index(spark, path, op)
+    codec.check(raw.columns, path, op)
+    payload = codec.payload(vec_col)
     latest = (
-        _keep_latest_per_id(spark.read.parquet(path), id_col, vec_col)
-        .select(id_col, vec_col)
+        _keep_latest_per_id(raw, id_col, payload)
+        .select(id_col, payload)
         # the source partitions are rewritten below — cut the lineage so
         # the write doesn't read the files it is replacing
         .transform(lineage_cut)
     )
-    indexed = ivf_assign_arrow(
-        latest, sorted(centroids), vec_col=vec_col
-    ).withColumn("wave", F.lit(0))
-    # static overwrite: compaction REPLACES the whole index — dynamic
-    # mode would leave the superseded wave partitions on disk
-    (
-        indexed.write.partitionBy("cell", "wave")
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .parquet(path)
+    assign_col = vec_col
+    if codec.quantized:
+        assign_col = "_rv"
+        latest = latest.select(
+            id_col, payload, codec.view(vec_col, "_rv", compaction=True)
+        )
+        _refuse_corrupt_codes(latest, codec, path, op)
+    indexed = ivf_assign_arrow(latest, sorted(centroids), vec_col=assign_col)
+    _write_tree(
+        indexed.select(id_col, payload, "cell").withColumn("wave", F.lit(0)),
+        path,
     )
 
 
@@ -1096,56 +1461,13 @@ def _pin_scoring_parallelism(latest: DataFrame) -> DataFrame:
     return latest.repartition(n)
 
 
-def _codec_view(
-    columns: list[str],
-    bounds: tuple[list[float], list[float]] | None,
-    codebooks: list[tuple[int, int, list[float]]] | None,
-    op: str,
-):
-    """THE codec-detection rule for every lifecycle operator that must
-    work over any index tree (float / SQ8 / PQ): given the tree's
-    columns, return ``(payload_col, decode_fn)`` where ``payload_col``
-    is the stored column the keep-last rule ties on and ``decode_fn``
-    maps it to a float view, or ``(None, None)`` for a float tree. A
-    quantized tree whose frozen artifact was not passed fails fast with
-    the artifact named — reconstructing without it is impossible, and
-    guessing silently would be worse."""
-    payload = _codec_payload(columns)
-    if payload == "codes":
-        if bounds is None:
-            raise ValueError(
-                f"{op}: index is an SQ8 tree (codes column) — pass its "
-                "frozen quantization bounds"
-            )
-        mn = F.array(*[F.lit(v) for v in bounds[0]])
-        mx = F.array(*[F.lit(v) for v in bounds[1]])
-        return "codes", lambda c: sq8_decode(c, mn, mx)
-    if payload == "pq_codes":
-        if codebooks is None:
-            raise ValueError(
-                f"{op}: index is a PQ tree (pq_codes column) — pass its "
-                "frozen codebooks"
-            )
-        return "pq_codes", _pq_decode_expr(codebooks)
-    return None, None
-
-
-def _codec_payload(columns: list[str]) -> str | None:
-    """Codec detection alone (no artifact validation, no decoder
-    construction): ``codes`` = SQ8, ``pq_codes`` = PQ, None = float."""
-    if "codes" in columns:
-        return "codes"
-    if "pq_codes" in columns:
-        return "pq_codes"
-    return None
-
-
 def _keep_latest_per_id(
     raw: DataFrame, id_col: str, vec_col: str
 ) -> DataFrame:
     """THE keep-last rule, in one place: newest wave per id, same-wave
-    ties broken by embedding bytes (deterministic). Compaction, the
-    drift report, and the retrain must agree on which row survives —
+    ties broken by payload bytes (deterministic). Compaction, the
+    drift report, the retrain and the query path must agree on which
+    row survives —
     this is a correctness contract, not a convenience (a tiebreak change
     replicated by hand across call sites would let the lifecycle
     functions silently disagree about survivors). A legacy cell-only
@@ -1169,8 +1491,7 @@ def ivf_drift_report(
     centroids: list[tuple[int, list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    bounds: tuple[list[float], list[float]] | None = None,
-    codebooks: list[tuple[int, int, list[float]]] | None = None,
+    codec: Codec = FLOAT,
 ) -> DataFrame:
     """One-row centroid-drift report for a persisted IVF index — the
     input to :func:`should_rebuild_centroids`, closing the last
@@ -1200,23 +1521,15 @@ def ivf_drift_report(
     build/retrain and persist it next to the centroid artifact; the
     decision compares current vs baseline.
 
-    CODEC-AWARE: a quantized tree (SQ8/PQ, detected from its schema)
-    reports distortion over the RECONSTRUCTED vectors — the same view
-    the query path scores, so the drift reading describes what serving
-    actually sees; pass the tree's frozen artifact (``bounds`` /
-    ``codebooks``) or fail fast with it named."""
-    raw = _read_index(spark, path, "ivf_drift_report")
-    payload, decode = _codec_view(
-        raw.columns, bounds, codebooks, "ivf_drift_report"
+    A quantized tree reports distortion over the RECONSTRUCTED vectors
+    (:meth:`Codec.view`) — the same view the query path scores, so the
+    drift reading describes what serving actually sees."""
+    op = "ivf_drift_report"
+    raw = _read_index(spark, path, op)
+    codec.check(raw.columns, path, op)
+    latest = _keep_latest_per_id(raw, id_col, codec.payload(vec_col)).select(
+        "cell", "wave", codec.view(vec_col, vec_col)
     )
-    if payload is not None:
-        latest = _keep_latest_per_id(raw, id_col, payload).select(
-            "cell", "wave", decode(F.col(payload)).alias(vec_col)
-        )
-    else:
-        latest = _keep_latest_per_id(raw, id_col, vec_col).select(
-            "cell", "wave", vec_col
-        )
     cent_df = F.broadcast(
         spark.createDataFrame(
             [(c, [float(x) for x in v]) for c, v in sorted(centroids)],
@@ -1311,117 +1624,54 @@ def retrain_ivf_centroids(
     lloyd_iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-) -> list[tuple[int, list[float]]]:
+    codec: Codec = FLOAT,
+) -> tuple[list[tuple[int, list[float]]], Codec]:
     """The rebuild-the-centroids action :func:`should_rebuild_centroids`
     gates — compact-and-retrain in one pass: collapse the index to its
-    keep-last survivors, re-seed (the ``n_centroids`` lowest surviving
-    ids — same deterministic rule as the build) and re-run Lloyd over
-    the CURRENT survivor set, then rewrite the index under the NEW
-    centroids as a fresh wave 0. Returns the new centroid artifact; the
-    caller persists it in place of the old one — every subsequent
-    upsert/query/serve call must use it (cells are renumbered).
+    keep-last survivors (RECONSTRUCTED under the old artifact for a
+    quantized tree), re-seed (the ``n_centroids`` lowest surviving ids —
+    same deterministic rule as the build) and re-run Lloyd over the
+    CURRENT survivor set, learn a fresh codec artifact of the same kind
+    from the survivors (:meth:`Codec.relearn`), then rewrite the index
+    under the NEW artifacts as a fresh wave 0. Returns ``(centroids,
+    codec)``; the caller persists both in place of the old ones — every
+    subsequent upsert/query/serve call must use them (cells are
+    renumbered). An empty tree, or (quantized) a survivor whose codes
+    fail to reconstruct, refuses before any write.
+
+    Quantization error COMPOUNDS once per retrain of a quantized tree
+    (the tree only holds codes, so the rebuild re-encodes
+    reconstructions — standard LSM-on-codes trade); an operator that
+    retains the original float vectors should rebuild from source
+    instead. HARD LIMIT: information the old artifact never stored
+    cannot come back — an SQ8 dimension whose ingested values saturated
+    the frozen bounds (clamped to the 0/255 endpoints) reconstructs to
+    the bound, so the retrained tree is a faithful index of the CODES,
+    not of the original vectors (measured in tests: a drift signature
+    living in bound-saturated dims is unrecoverable). The drift trigger
+    firing early is the defense; rebuilding from source is the cure.
 
     QUIESCE REQUIRED, exactly as for compaction: stop the ingest
     stream, retrain, restart with a FRESH checkpoint (the wave-base
-    sidecar re-pins from the rewritten index) and the new artifact.
+    sidecar re-pins from the rewritten index) and the new artifacts.
     Resuming an old checkpoint replays waves assigned under the OLD
     centroids into the new layout — same corruption class as
     compact-under-live-ingest."""
-    latest = (
-        _keep_latest_per_id(
-            _read_index(spark, path, "retrain_ivf_centroids"),
-            id_col,
-            vec_col,
-        )
-        .select(id_col, vec_col)
-        # survivor set feeds seeding, Lloyd, and the rewrite of the very
-        # files it came from: cut the lineage once (id+vector rows — the
-        # compressed-intermediate doctrine, ARCHITECTURE §3)
-        .transform(lineage_cut)
-    )
-    seeds = (
-        latest.orderBy(id_col).limit(n_centroids).select(id_col, vec_col)
-    )
-    seed_rows = [(r[0], [float(x) for x in r[1]]) for r in seeds.collect()]
-    new_cents = (
-        lloyd_refine_rows(latest, seed_rows, n_iters=lloyd_iters, vec_col=vec_col)
-        if lloyd_iters > 0
-        else sorted(seed_rows)
-    )
-    build_ivf_index(
-        latest, path, centroids=new_cents, id_col=id_col, vec_col=vec_col
-    )
-    return new_cents
-
-
-def retrain_quantized_ivf(
-    spark,
-    path: str,
-    n_centroids: int = 8,
-    lloyd_iters: int = 2,
-    id_col: str = "vec_id",
-    bounds: tuple[list[float], list[float]] | None = None,
-    codebooks: list[tuple[int, int, list[float]]] | None = None,
-) -> tuple:
-    """The retrain action for a QUANTIZED tree (SQ8/PQ, detected from
-    its schema) — completes codec parity of the lifecycle: collapse to
-    keep-last survivors, RECONSTRUCT them under the old artifact, then
-    re-seed/re-train centroids over the reconstructions (the same
-    lowest-surviving-id rule as :func:`retrain_ivf_centroids`) and
-    rebuild the tree with FRESH quantization artifacts learned from the
-    survivor set (new bounds for SQ8; new codebooks of the SAME (m,
-    dsub) geometry for PQ, seeded from the k lowest surviving ids).
-    Returns ``(new_centroids, new_bounds_or_codebooks)`` — both replace
-    the old artifacts for every subsequent call; cells are renumbered.
-
-    Quantization error COMPOUNDS once per retrain here (the tree only
-    holds codes, so the rebuild re-encodes reconstructions — standard
-    LSM-on-codes trade); an operator that retains the original float
-    vectors should rebuild from source instead. HARD LIMIT: information
-    the old artifact never stored cannot come back — an SQ8 dimension
-    whose ingested values saturated the frozen bounds (clamped to the
-    0/255 endpoints) reconstructs to the bound, so the retrained tree
-    is a faithful index of the CODES, not of the original vectors
-    (measured in tests: a drift signature living in bound-saturated
-    dims is unrecoverable). The drift trigger firing early is the
-    defense; rebuilding from source is the cure. QUIESCE REQUIRED,
-    exactly as :func:`retrain_ivf_centroids`: stop ingest, retrain,
-    restart with a FRESH checkpoint and the new artifacts."""
-    op = "retrain_quantized_ivf"
+    op = "retrain_ivf_centroids"
     raw = _read_index(spark, path, op)
-    payload, decode = _codec_view(raw.columns, bounds, codebooks, op)
-    if payload is None:
-        raise ValueError(
-            f"{op}: index at {path} is a float tree — use "
-            "retrain_ivf_centroids"
-        )
+    codec.check(raw.columns, path, op)
+    work = "_rv" if codec.quantized else vec_col
     latest = (
-        _keep_latest_per_id(raw, id_col, payload)
-        .select(id_col, decode(F.col(payload)).alias("_rv"))
-        # survivor reconstructions feed seeding, Lloyd, artifact
-        # learning, AND the rewrite of the very files they came from:
-        # one lineage cut (ARCHITECTURE §3)
+        _keep_latest_per_id(raw, id_col, codec.payload(vec_col))
+        .select(id_col, codec.view(vec_col, work))
+        # survivor set feeds seeding, Lloyd, artifact learning, and the
+        # rewrite of the very files it came from: cut the lineage once
+        # (id+vector rows — the compressed-intermediate doctrine,
+        # ARCHITECTURE §3)
         .transform(lineage_cut)
     )
-    # the same corrupt-codes refusal as compaction: a survivor whose
-    # codes fail to reconstruct would otherwise be SILENTLY DROPPED by
-    # the rebuild's drop_null_vectors (permanent data loss with no
-    # error) — or crash the seed collect with a raw TypeError if its id
-    # lands in the seed window
-    if payload == "codes":
-        expect_dim = len(bounds[0])
-    else:
-        _m, _dsub = _pq_geometry(codebooks)
-        expect_dim = _m * _dsub
-    n_bad = latest.filter(
-        F.col("_rv").isNull() | (F.size("_rv") != expect_dim)
-    ).count()
-    if n_bad:
-        raise ValueError(
-            f"{op}: {n_bad} row(s) at {path} failed to reconstruct to "
-            f"{expect_dim} dims — corrupt or foreign codes; refusing to "
-            "retrain over a survivor set that would silently lose them"
-        )
+    if codec.quantized:
+        _refuse_corrupt_codes(latest, codec, path, op)
     seeds = latest.orderBy(id_col).limit(n_centroids)
     seed_rows = [(r[0], [float(x) for x in r[1]]) for r in seeds.collect()]
     if not seed_rows:
@@ -1430,632 +1680,16 @@ def retrain_quantized_ivf(
             "from (empty tree?) — there is nothing to re-seed Lloyd with"
         )
     new_cents = (
-        lloyd_refine_rows(latest, seed_rows, n_iters=lloyd_iters, vec_col="_rv")
+        lloyd_refine_rows(latest, seed_rows, n_iters=lloyd_iters, vec_col=work)
         if lloyd_iters > 0
         else sorted(seed_rows)
     )
-    if payload == "codes":
-        _, new_bounds = build_sq8_ivf_index(
-            latest, path, centroids=new_cents, id_col=id_col, vec_col="_rv"
-        )
-        return new_cents, new_bounds
-    m, dsub = _pq_geometry(codebooks)
-    k = 1 + max(c for _, c, _ in codebooks)
-    seed_id_rows = latest.select(id_col).orderBy(id_col).limit(k).collect()
-    cb_df = pq_codebooks(
-        latest,
-        m=m,
-        dsub=dsub,
-        k=k,
-        lloyd_iters=lloyd_iters,
-        id_col=id_col,
-        vec_col="_rv",
-        seed_ids=[r[0] for r in seed_id_rows],
+    new_codec = codec.relearn(latest, lloyd_iters, id_col, work)
+    build_ivf_index(
+        latest, path, centroids=new_cents, id_col=id_col, vec_col=work,
+        codec=new_codec,
     )
-    new_codebooks = sorted(
-        (r["j"], r["cell"], [float(x) for x in r["cv"]])
-        for r in cb_df.collect()  # m*k rows — artifact, never corpus
-    )
-    build_pq_ivf_index(
-        latest,
-        path,
-        centroids=new_cents,
-        codebooks=new_codebooks,
-        id_col=id_col,
-        vec_col="_rv",
-    )
-    return new_cents, new_codebooks
-
-
-def build_sq8_ivf_index(
-    corpus: DataFrame,
-    path: str,
-    n_centroids: int = 8,
-    lloyd_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: list[tuple[int, list[float]]] | None = None,
-    bounds: tuple[list[float], list[float]] | None = None,
-) -> tuple[list[tuple[int, list[float]]], tuple[list[float], list[float]]]:
-    """Scalar-quantized persisted IVF index — the compressed serving
-    artifact the float lifecycle's 100 TB story needs: rows store int8
-    CODES (array<int>, 0..255 — parquet's bit-packed encoding lands them
-    at ~1 byte/dim on disk vs 4 for float32, a ~4x cut in index bytes
-    and probe I/O), partitioned by (cell, wave) exactly like the float
-    index so partition pruning, wave upserts, and keep-last semantics
-    carry over unchanged. Returns the TWO frozen artifacts the caller
-    persists: the centroids (cell assignment) and the per-dimension
-    quantization bounds (mn, mx) — both are index metadata with the same
-    lifetime discipline (a retrain mints new ones; mixing artifacts
-    across builds corrupts silently, exactly like centroids alone).
-
-    Cell assignment runs on the FULL-PRECISION vectors (quantization
-    error must cost recall at the re-ranking margin, not move vectors
-    across cells); only the stored payload is compressed. NULL vectors
-    are dropped per the admission rule."""
-    corpus = drop_null_vectors(corpus, vec_col)
-    if bounds is None:
-        dim_row = corpus.select(F.size(vec_col)).first()
-        dim = int(dim_row[0]) if dim_row else 0
-        if dim == 0:
-            raise ValueError(
-                "build_sq8_ivf_index: corpus has no non-NULL vectors to "
-                "learn quantization bounds from — nothing to index"
-            )
-        b = sq8_bounds(corpus, vec_col=vec_col, dim=dim).first()
-        bounds = ([float(x) for x in b["mn"]], [float(x) for x in b["mx"]])
-    if centroids is not None:
-        cent_rows = sorted(centroids)
-    else:
-        cent_rows = _seed_centroids(
-            corpus, n_centroids, lloyd_iters, id_col, vec_col
-        )
-    mn, mx = (F.array(*[F.lit(v) for v in bounds[0]]),
-              F.array(*[F.lit(v) for v in bounds[1]]))
-    indexed = (
-        ivf_assign_arrow(
-            corpus.select(id_col, vec_col), cent_rows, vec_col=vec_col
-        )
-        .select(
-            id_col,
-            sq8_codes(F.col(vec_col), mn, mx).alias("codes"),
-            "cell",
-        )
-        .withColumn("wave", F.lit(0))
-    )
-    (
-        indexed.write.partitionBy("cell", "wave")
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .parquet(path)
-    )
-    return cent_rows, bounds
-
-
-def upsert_sq8_ivf_index(
-    new_vectors: DataFrame,
-    path: str,
-    centroids: list[tuple[int, list[float]]],
-    bounds: tuple[list[float], list[float]],
-    wave: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    check_layout: bool = True,
-) -> None:
-    """Wave append to a persisted SQ8 index under the FROZEN centroid +
-    bounds artifacts: new float vectors are cell-assigned at full
-    precision, encoded under the build-time bounds (values outside them
-    clamp to 0/255 — the scalar-quantization saturation trade; a drifted
-    value range is one more signal the drift trigger's retrain refreshes
-    BOTH artifacts), and land in (cell, wave) dynamic-overwrite
-    partitions with the same replay-idempotency and cross-cell staleness
-    contract as the float upsert. Same guards: wave >= 1, NULL vectors
-    dropped, a codes-less (foreign/float) layout rejected loudly —
-    ``check_layout=False`` skips the per-call listing for callers that
-    verified the layout once for the index's lifetime (the streaming
-    wrapper, exactly as the float upsert)."""
-    if wave < 1:
-        raise ValueError(
-            f"upsert_sq8_ivf_index: wave must be >= 1 (wave 0 is the "
-            f"build), got {wave}"
-        )
-    new_vectors = drop_null_vectors(new_vectors, vec_col)
-    if check_layout:
-        from pyspark.errors import AnalysisException  # noqa: PLC0415
-
-        try:
-            existing = new_vectors.sparkSession.read.parquet(path).columns
-        except AnalysisException:
-            existing = None  # no index yet — this wave creates it
-        if existing is not None and (
-            "codes" not in existing or "wave" not in existing
-        ):
-            raise ValueError(
-                f"upsert_sq8_ivf_index: index at {path} is not an SQ8 wave "
-                "index (expected codes + wave columns); writing SQ8 waves "
-                "into a float or legacy tree would create a mixed layout no "
-                "reader can open"
-            )
-    from .upsert import upsert_partitions  # noqa: PLC0415
-
-    mn, mx = (F.array(*[F.lit(v) for v in bounds[0]]),
-              F.array(*[F.lit(v) for v in bounds[1]]))
-    assigned = ivf_assign_arrow(
-        new_vectors.select(id_col, vec_col), sorted(centroids), vec_col=vec_col
-    ).select(
-        id_col,
-        sq8_codes(F.col(vec_col), mn, mx).alias("codes"),
-        "cell",
-    ).withColumn("wave", F.lit(wave))
-    upsert_partitions(assigned, path, ["cell", "wave"])
-
-
-def _compact_coded_ivf_index(
-    spark,
-    path: str,
-    centroids: list[tuple[int, list[float]]],
-    code_col: str,
-    decode,
-    id_col: str,
-    op: str,
-    expect_dim: int,
-) -> None:
-    """Shared compaction for the quantized (SQ8/PQ) index trees:
-    collapse all waves keep-last per id, REASSIGN each survivor's cell
-    from its RECONSTRUCTED vector under the frozen centroids — the same
-    vector the query path scores, so post-compact probe behavior is
-    self-consistent — and rewrite as a fresh wave 0. The stored codes
-    are carried through UNCHANGED (no decode→re-encode round trip to
-    accumulate quantization error); quiesce protocol exactly as
-    :func:`compact_ivf_index`.
-
-    A survivor whose codes fail to reconstruct to ``expect_dim`` values
-    (corrupt/foreign codes, e.g. a wave replayed under a retrained
-    codebook) ABORTS the compaction loudly before any write — the query
-    path scores such a row as NULL cosine (it never ranks), but
-    compaction rewriting it under a fabricated cell would launder the
-    corruption into a valid-looking wave 0. The check is one extra pass
-    over the keep-last survivors; compaction is an offline op."""
-    latest = (
-        _keep_latest_per_id(_read_index(spark, path, op), id_col, code_col)
-        .select(id_col, code_col)
-        .transform(lineage_cut)
-    )
-    recon = latest.select(
-        id_col, code_col, decode(F.col(code_col)).alias("_rv")
-    )
-    n_bad = recon.filter(
-        F.col("_rv").isNull() | (F.size("_rv") != expect_dim)
-    ).count()
-    if n_bad:
-        raise ValueError(
-            f"{op}: {n_bad} row(s) at {path} failed to reconstruct to "
-            f"{expect_dim} dims — corrupt or foreign codes (codes written "
-            "under a different codebook/bounds artifact?); refusing to "
-            "compact them into a fresh wave 0"
-        )
-    indexed = (
-        ivf_assign_arrow(
-            recon.select(id_col, "_rv"), sorted(centroids), vec_col="_rv"
-        )
-        .select(id_col, "cell")
-        .join(latest, id_col)
-        .withColumn("wave", F.lit(0))
-    )
-    (
-        indexed.write.partitionBy("cell", "wave")
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .parquet(path)
-    )
-
-
-def compact_sq8_ivf_index(
-    spark,
-    path: str,
-    centroids: list[tuple[int, list[float]]],
-    bounds: tuple[list[float], list[float]],
-    id_col: str = "vec_id",
-) -> None:
-    """Compaction for the SQ8 index: keep-last + reconstruct-and-reassign
-    (see :func:`_compact_coded_ivf_index`); codes stored unchanged."""
-    mn = F.array(*[F.lit(v) for v in bounds[0]])
-    mx = F.array(*[F.lit(v) for v in bounds[1]])
-    _compact_coded_ivf_index(
-        spark,
-        path,
-        centroids,
-        "codes",
-        lambda c: F.transform(sq8_decode(c, mn, mx), lambda x: x.cast("float")),
-        id_col,
-        op="compact_sq8_ivf_index",
-        expect_dim=len(bounds[0]),
-    )
-
-
-def compact_pq_ivf_index(
-    spark,
-    path: str,
-    centroids: list[tuple[int, list[float]]],
-    codebooks: list[tuple[int, int, list[float]]],
-    id_col: str = "vec_id",
-) -> None:
-    """Compaction for the PQ index: keep-last + reconstruct-and-reassign
-    via the shared literal-lookup decode (:func:`_pq_decode_expr` — the
-    same reconstruction the query path scores); codes stored
-    unchanged."""
-    m, dsub = _pq_geometry(codebooks)
-    _compact_coded_ivf_index(
-        spark,
-        path,
-        centroids,
-        "pq_codes",
-        _pq_decode_expr(codebooks),
-        id_col,
-        op="compact_pq_ivf_index",
-        expect_dim=m * dsub,
-    )
-
-
-def query_sq8_ivf_index(
-    spark,
-    path: str,
-    centroids: list[tuple[int, list[float]]],
-    bounds: tuple[list[float], list[float]],
-    queries: DataFrame,
-    k: int = 5,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ANN over the persisted SQ8 index: probe-cell partition pruning and
-    newest-wave-per-id exactly as the float query path, but the scan
-    reads ~1/4 the bytes and scoring is ASYMMETRIC — the float query
-    against the dequantized code (standard SQ practice: keeping the
-    query at full precision costs nothing and beats symmetric
-    reconstruction on recall). Output contract matches query_ivf_index:
-    (query_id, neighbor_id, cos_sim, rank), cos_sim computed over the
-    reconstructed neighbor."""
-    probes = ivf_assign_arrow(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")),
-        sorted(centroids),
-        vec_col="qv",
-        n_best=n_probe,
-    )
-    probe_cells = sorted(
-        {r["cell"] for r in probes.select("cell").distinct().collect()}
-    )
-    index = spark.read.parquet(path).filter(F.col("cell").isin(probe_cells))
-    index = _keep_latest_per_id(index, id_col, "codes")
-    index = _pin_scoring_parallelism(index)
-    mn, mx = (F.array(*[F.lit(v) for v in bounds[0]]),
-              F.array(*[F.lit(v) for v in bounds[1]]))
-    indexed = index.select(
-        F.col(id_col).alias("neighbor_id"),
-        sq8_decode(F.col("codes"), mn, mx).alias("cv"),
-        "cell",
-    )
-    scored = (
-        F.broadcast(probes)
-        .join(indexed, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
-        )
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    return topk_per_group(
-        scored,
-        ["query_id"],
-        [F.col("cos_sim").desc(), F.col("neighbor_id").asc()],
-        k=k,
-        rank_col="rank",
-    ).select("query_id", "neighbor_id", "cos_sim", "rank")
-
-
-PQ_M = 4
-PQ_K = 16
-
-
-def _pq_geometry(codebooks: list[tuple[int, int, list[float]]]) -> tuple[int, int]:
-    """(m, dsub) derived from the frozen codebook artifact itself — the
-    artifact is the only truth about the PQ geometry; every consumer
-    derives from it instead of trusting caller-passed parameters that
-    can silently disagree."""
-    m = 1 + max(j for j, _, _ in codebooks)
-    dsub = len(codebooks[0][2])
-    return m, dsub
-
-
-def _pq_encode(
-    vectors: DataFrame,
-    cent: DataFrame,
-    m: int,
-    dsub: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, _vkey, codes): each vector's m one-byte PQ codes under a
-    FROZEN codebook table (j, cell, cv) — the encode half shared by the
-    build and upsert paths of the persisted PQ index. Assignment is
-    argmin squared-L2 per (row, subspace) against the broadcast m*k
-    codebook (ties: lowest cell), codes ordered by subspace. Rows are
-    keyed by (id, vector-as-string), NOT id alone: a batch carrying the
-    same id twice with different vectors must encode each vector's own
-    codes — an id-keyed argmin would mix subspaces across the duplicates
-    into a chimera code vector equal to neither input. Callers join the
-    result back on BOTH keys and drop ``_vkey``."""
-    src = vectors.select(
-        id_col, vec_col, F.col(vec_col).cast("string").alias("_vkey")
-    )
-    sub = _pq_subvecs(
-        src, m=m, dsub=dsub, id_col=id_col, vec_col=vec_col, carry=("_vkey",)
-    )
-    return (
-        _pq_assign_codes(sub, cent, keys=(id_col, "_vkey"))
-        .groupBy(id_col, "_vkey")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("j", "cell"))),
-                lambda x: x["cell"],
-            ).alias("pq_codes")
-        )
-    )
-
-
-def _pq_decode_expr(codebooks: list[tuple[int, int, list[float]]]):
-    """THE PQ reconstruction rule, shared by compaction and the query
-    path (two hand-rolled decodes would let them silently disagree
-    about the vector a row of codes means): returns a Column fn mapping
-    an m-element code array to its flattened reconstruction via
-    LITERAL per-subspace lookup arrays — element_at on an m*k-entry
-    constant, row-local, NO shuffle (the explode + codebook-join +
-    regroup alternative pays an exchange of m× the probed rows on the
-    serving hot path). A code that is NULL, negative, out of range, or
-    pointing at a cell absent from the codebook yields a NULL
-    reconstruction for the WHOLE row (flatten propagates the NULL
-    part): queries score it as NULL cosine (never outranks a real row),
-    compaction refuses it loudly — corruption surfaces, consistently,
-    instead of being laundered through a fabricated substitute cell."""
-    cb: dict[int, dict[int, list[float]]] = {}
-    for j, c, cv in codebooks:
-        cb.setdefault(j, {})[c] = cv
-    m = 1 + max(cb)
-
-    def decode(codes: Column) -> Column:
-        parts = []
-        for j in range(m):
-            cells = cb.get(j, {})
-            kmax = max(cells)
-            lut = F.array(
-                *[
-                    F.array(*[F.lit(float(x)) for x in cells[c]])
-                    if c in cells
-                    else F.lit(None).cast("array<double>")
-                    for c in range(kmax + 1)
-                ]
-            )
-            code = F.element_at(codes, j + 1)
-            parts.append(
-                F.when(
-                    (code >= 0) & (code <= kmax),
-                    F.element_at(lut, code + F.lit(1)),
-                )
-            )
-        return F.flatten(F.array(*parts))
-
-    return decode
-
-
-def _pq_codebook_df(spark, codebooks: list[tuple[int, int, list[float]]]):
-    """The frozen codebook artifact ((j, cell, cv) rows, m*k total) as a
-    broadcast-ready DataFrame."""
-    return spark.createDataFrame(
-        [(j, c, [float(x) for x in cv]) for j, c, cv in sorted(codebooks)],
-        "j int, cell int, cv array<double>",
-    )
-
-
-def build_pq_ivf_index(
-    corpus: DataFrame,
-    path: str,
-    n_centroids: int = 8,
-    m: int = PQ_M,
-    dsub: int = 16,
-    k: int = PQ_K,
-    lloyd_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: list[tuple[int, list[float]]] | None = None,
-    codebooks: list[tuple[int, int, list[float]]] | None = None,
-) -> tuple[
-    list[tuple[int, list[float]]], list[tuple[int, int, list[float]]]
-]:
-    """Product-quantized persisted IVF index — the deepest compression
-    tier of the serving family (float -> SQ8 -> PQ): rows store m
-    one-byte codes (m=4 on 64-dim vectors = 16x fewer values than
-    float32; parquet bit-packs them to ~1 byte each), under the same
-    (cell, wave) partitioning/lifecycle as the float and SQ8 indexes.
-    Returns the TWO frozen artifacts: IVF centroids (full-precision cell
-    assignment, as always) and the m*k PQ codebook rows — the retrain
-    lifetime discipline applies to both. NULL vectors dropped per the
-    admission rule."""
-    corpus = drop_null_vectors(corpus, vec_col)
-    if centroids is not None:
-        cent_rows = sorted(centroids)
-    else:
-        cent_rows = _seed_centroids(
-            corpus, n_centroids, lloyd_iters, id_col, vec_col
-        )
-    spark = corpus.sparkSession
-    if codebooks is not None:
-        # rebuild under a FROZEN codebook artifact: its geometry is the
-        # only truth — passed m/dsub that disagree with it would encode
-        # subvectors against wrong-dimension sub-centroids (NULL L2,
-        # effectively random codes) with no error anywhere
-        m, dsub = _pq_geometry(codebooks)
-    if codebooks is None:
-        cb_df = pq_codebooks(
-            corpus,
-            m=m,
-            dsub=dsub,
-            k=k,
-            lloyd_iters=lloyd_iters,
-            id_col=id_col,
-            vec_col=vec_col,
-        )
-        codebooks = sorted(
-            (r["j"], r["cell"], [float(x) for x in r["cv"]])
-            for r in cb_df.collect()  # m*k rows — artifact, never corpus
-        )
-        if not codebooks:
-            raise ValueError(
-                "build_pq_ivf_index: corpus has no non-NULL vectors to "
-                "learn codebooks from — nothing to index"
-            )
-    cent = _pq_codebook_df(spark, codebooks)
-    # join back on (id, vector-string): duplicate ids in one batch keep
-    # their OWN codes and cells (see _pq_encode), matching the float and
-    # SQ8 paths which carry each duplicate row's payload through
-    assigned = ivf_assign_arrow(
-        corpus.select(id_col, vec_col), cent_rows, vec_col=vec_col
-    ).select(id_col, F.col(vec_col).cast("string").alias("_vkey"), "cell")
-    encoded = _pq_encode(
-        corpus, cent, m=m, dsub=dsub, id_col=id_col, vec_col=vec_col
-    )
-    indexed = (
-        assigned.join(encoded, [id_col, "_vkey"])
-        .drop("_vkey")
-        .withColumn("wave", F.lit(0))
-    )
-    (
-        indexed.write.partitionBy("cell", "wave")
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .parquet(path)
-    )
-    return cent_rows, codebooks
-
-
-def upsert_pq_ivf_index(
-    new_vectors: DataFrame,
-    path: str,
-    centroids: list[tuple[int, list[float]]],
-    codebooks: list[tuple[int, int, list[float]]],
-    wave: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    check_layout: bool = True,
-) -> None:
-    """Wave append to a persisted PQ index under the FROZEN centroid +
-    codebook artifacts — guards, replay idempotency, and the cross-cell
-    staleness contract exactly as the float/SQ8 upserts. The PQ geometry
-    (m, dsub) is DERIVED from the codebook artifact, never passed: an
-    independent parameter that disagreed with the artifact would encode
-    garbage codes into the index with no error anywhere.
-    ``check_layout=False`` skips the per-call listing for callers that
-    verified the layout once for the index's lifetime."""
-    if wave < 1:
-        raise ValueError(
-            f"upsert_pq_ivf_index: wave must be >= 1 (wave 0 is the "
-            f"build), got {wave}"
-        )
-    new_vectors = drop_null_vectors(new_vectors, vec_col)
-    if check_layout:
-        from pyspark.errors import AnalysisException  # noqa: PLC0415
-
-        try:
-            existing = new_vectors.sparkSession.read.parquet(path).columns
-        except AnalysisException:
-            existing = None  # no index yet — this wave creates it
-        if existing is not None and (
-            "pq_codes" not in existing or "wave" not in existing
-        ):
-            raise ValueError(
-                f"upsert_pq_ivf_index: index at {path} is not a PQ wave index "
-                "(expected pq_codes + wave columns); writing PQ waves into a "
-                "float/SQ8/legacy tree would create a mixed layout no reader "
-                "can open"
-            )
-    from .upsert import upsert_partitions  # noqa: PLC0415
-
-    spark = new_vectors.sparkSession
-    m, dsub = _pq_geometry(codebooks)
-    cent = _pq_codebook_df(spark, codebooks)
-    assigned = ivf_assign_arrow(
-        new_vectors.select(id_col, vec_col), sorted(centroids), vec_col=vec_col
-    ).select(id_col, F.col(vec_col).cast("string").alias("_vkey"), "cell")
-    encoded = _pq_encode(
-        new_vectors, cent, m=m, dsub=dsub, id_col=id_col, vec_col=vec_col
-    )
-    landed = (
-        assigned.join(encoded, [id_col, "_vkey"])
-        .drop("_vkey")
-        .withColumn("wave", F.lit(wave))
-    )
-    upsert_partitions(landed, path, ["cell", "wave"])
-
-
-def query_pq_ivf_index(
-    spark,
-    path: str,
-    centroids: list[tuple[int, list[float]]],
-    codebooks: list[tuple[int, int, list[float]]],
-    queries: DataFrame,
-    k: int = 5,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ANN over the persisted PQ index: probe-cell partition pruning and
-    the shared keep-last rule, neighbors RECONSTRUCTED from their m
-    codes via the shared literal-lookup decode (:func:`_pq_decode_expr`
-    — row-local, no shuffle on the serving hot path; an explode + join +
-    regroup here would pay an exchange of m× the probed rows per query
-    batch), asymmetric scoring (the float query never quantizes), cosine
-    over the reconstruction, per-query top-k. A corrupt/foreign code row
-    reconstructs NULL → NULL cos_sim → never outranks a real row. Output
-    contract matches query_ivf_index."""
-    probes = ivf_assign_arrow(
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-        ),
-        sorted(centroids),
-        vec_col="qv",
-        n_best=n_probe,
-    )
-    probe_cells = sorted(
-        {r["cell"] for r in probes.select("cell").distinct().collect()}
-    )
-    index = spark.read.parquet(path).filter(F.col("cell").isin(probe_cells))
-    index = _keep_latest_per_id(index, id_col, "pq_codes")
-    index = _pin_scoring_parallelism(index)
-    decode = _pq_decode_expr(codebooks)
-    indexed = index.select(
-        F.col(id_col).alias("neighbor_id"),
-        decode(F.col("pq_codes")).alias("cv"),
-        "cell",
-    )
-    scored = (
-        F.broadcast(probes)
-        .join(indexed, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
-        )
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    return topk_per_group(
-        scored,
-        ["query_id"],
-        [F.col("cos_sim").desc(), F.col("neighbor_id").asc()],
-        k=k,
-        rank_col="rank",
-    ).select("query_id", "neighbor_id", "cos_sim", "rank")
+    return new_cents, new_codec
 
 
 def ivf_probe_sweep(
@@ -2143,22 +1777,23 @@ def index_codec_frontier(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """The recall-for-bytes frontier across the serving family's three
-    codecs — the report an operator reads to PICK the tier: builds a
-    float, an SQ8, and a PQ index over the same corpus under ONE shared
-    centroid artifact (training once isolates codec error from cell
-    assignment — every tree probes identically), grades each against
-    ONE shared brute-force truth pass at the same (k, n_probe), and
-    measures each tree's actual parquet bytes. One row per codec:
-    (codec, n_rows, bytes_on_disk, bytes_per_vector, mean_recall,
-    min_recall, n_queries).
+    codecs — the report an operator reads to PICK the tier: learns an
+    SQ8 and a PQ codec (``m``/``dsub``/``pq_k`` geometry) from the
+    corpus and builds a float, an SQ8, and a PQ index through the one
+    build path under ONE shared centroid artifact (training once
+    isolates codec error from cell assignment — every tree probes
+    identically), grades each against ONE shared brute-force truth pass
+    at the same (k, n_probe), and measures each tree's actual parquet
+    bytes. One row per codec: (codec, n_rows, bytes_on_disk,
+    bytes_per_vector, mean_recall, min_recall, n_queries).
 
-    The corpus is cut once (it feeds seeding, Lloyd, three builds, and
-    the truth pass — six-plus traversals of the same id+vector rows);
-    every per-codec side reads only its own tree. Bytes are measured by
-    a local directory walk — the trees this report builds are
-    throwaway comparison artifacts under ``base_dir``, not the serving
-    index, so the report is local-path-only by design (a remote-scheme
-    base_dir is refused loudly)."""
+    The corpus is cut once (it feeds seeding, Lloyd, codec learning,
+    three builds, and the truth pass — six-plus traversals of the same
+    id+vector rows); every per-codec side reads only its own tree.
+    Bytes are measured by a local directory walk — the trees this report
+    builds are throwaway comparison artifacts under ``base_dir``, not
+    the serving index, so the report is local-path-only by design (a
+    remote-scheme base_dir is refused loudly)."""
     import os  # noqa: PLC0415
     from urllib.parse import urlparse  # noqa: PLC0415
 
@@ -2181,25 +1816,30 @@ def index_codec_frontier(
         corpus, queries, k=k, id_col=id_col, vec_col=vec_col
     ).transform(lineage_cut)
 
-    fpath, spath, ppath = (os.path.join(root, c) for c in ("float", "sq8", "pq"))
-    build_ivf_index(corpus, fpath, centroids=cents, id_col=id_col, vec_col=vec_col)
-    # a schemeless base_dir resolves against fs.defaultFS, which need
-    # not be the driver's local filesystem — if the tree did not land
-    # where tree_bytes() will walk, the bytes column would be silently
-    # zero, the exact wrong-report mode the loud guard above exists for
-    if not os.path.isdir(fpath):
-        raise ValueError(
-            f"index_codec_frontier: {fpath} was not created on the "
-            "driver-local filesystem (non-local fs.defaultFS?); the byte "
-            "measurement is local-only — pass an explicit file: URI"
+    codecs = (
+        ("float", FLOAT),
+        ("sq8", Codec.learn_sq8(corpus, vec_col=vec_col)),
+        ("pq", Codec.learn_pq(
+            corpus, m=m, dsub=dsub, k=pq_k, lloyd_iters=lloyd_iters,
+            id_col=id_col, vec_col=vec_col,
+        )),
+    )
+    for name, codec in codecs:
+        path = os.path.join(root, name)
+        build_ivf_index(
+            corpus, path, centroids=cents, id_col=id_col, vec_col=vec_col,
+            codec=codec,
         )
-    _, bounds = build_sq8_ivf_index(
-        corpus, spath, centroids=cents, id_col=id_col, vec_col=vec_col
-    )
-    _, codebooks = build_pq_ivf_index(
-        corpus, ppath, centroids=cents, m=m, dsub=dsub, k=pq_k,
-        lloyd_iters=lloyd_iters, id_col=id_col, vec_col=vec_col,
-    )
+        # a schemeless base_dir resolves against fs.defaultFS, which need
+        # not be the driver's local filesystem — if the tree did not land
+        # where tree_bytes() will walk, the bytes column would be silently
+        # zero, the exact wrong-report mode the loud guard above exists for
+        if not os.path.isdir(path):
+            raise ValueError(
+                f"index_codec_frontier: {path} was not created on the "
+                "driver-local filesystem (non-local fs.defaultFS?); the "
+                "byte measurement is local-only — pass an explicit file: URI"
+            )
 
     def tree_bytes(p: str) -> int:
         total = 0
@@ -2211,26 +1851,15 @@ def index_codec_frontier(
             )
         return total
 
-    def approx(codec: str) -> DataFrame:
-        if codec == "sq8":
-            return query_sq8_ivf_index(
-                spark, spath, cents, bounds, queries,
-                k=k, n_probe=n_probe, id_col=id_col, vec_col=vec_col,
-            )
-        if codec == "pq":
-            return query_pq_ivf_index(
-                spark, ppath, cents, codebooks, queries,
-                k=k, n_probe=n_probe, id_col=id_col, vec_col=vec_col,
-            )
-        return query_ivf_index(
-            spark, fpath, cents, queries,
-            k=k, n_probe=n_probe, id_col=id_col, vec_col=vec_col,
-        )
-
     n_rows = corpus.count()
     out = []
-    for codec, path in (("float", fpath), ("sq8", spath), ("pq", ppath)):
-        agg = _grade_recall(truth, approx(codec)).agg(
+    for name, codec in codecs:
+        path = os.path.join(root, name)
+        approx = query_ivf_index(
+            spark, path, cents, queries, k=k, n_probe=n_probe,
+            id_col=id_col, vec_col=vec_col, codec=codec,
+        )
+        agg = _grade_recall(truth, approx).agg(
             F.round(F.avg("recall"), 6).alias("mean_recall"),
             F.round(F.min("recall"), 6).alias("min_recall"),
             F.count(F.lit(1)).alias("n_queries"),
@@ -2238,7 +1867,7 @@ def index_codec_frontier(
         b = tree_bytes(path)
         out.append(
             (
-                codec,
+                name,
                 n_rows,
                 b,
                 round(b / max(1, n_rows), 2),
@@ -2264,12 +1893,24 @@ def query_ivf_index(
     n_probe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    codec: Codec = FLOAT,
 ) -> DataFrame:
     """ANN over a persisted IVF index: assign each query its n_probe cells,
     scan ONLY those cell partitions (partition pruning via the isin filter
     — the scan's PartitionFilters, not a post-read filter), score
-    bucket-locally, rank per query. Matches `cosine_topk_ivf` output for
-    the same corpus/seeding."""
+    bucket-locally, rank per query: (query_id, neighbor_id, cos_sim,
+    rank). Matches `cosine_topk_ivf` output for the same corpus/seeding.
+
+    A quantized tree scores ASYMMETRICALLY — the float query against
+    each neighbor's reconstruction (:meth:`Codec.view`; standard SQ/PQ
+    practice: keeping the query at full precision costs nothing and
+    beats symmetric reconstruction on recall). A corrupt/foreign code
+    row reconstructs NULL → NULL cos_sim → never outranks a real row.
+    Only quantized trees pin the scoring parallelism
+    (:func:`_pin_scoring_parallelism`); the float plan gains no
+    exchange."""
+    raw = _read_index(spark, path, "query_ivf_index")
+    codec.check(raw.columns, path, "query_ivf_index")
     probes = ivf_assign_arrow(
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")),
         sorted(centroids),
@@ -2277,7 +1918,7 @@ def query_ivf_index(
         n_best=n_probe,
     )
     probe_cells = sorted({r["cell"] for r in probes.select("cell").distinct().collect()})
-    index = spark.read.parquet(path).filter(F.col("cell").isin(probe_cells))
+    index = raw.filter(F.col("cell").isin(probe_cells))
     if "wave" in index.columns:
         # incremental index (build + upsert waves): keep the NEWEST wave
         # per id within the probed cells — a re-ingested vector
@@ -2286,9 +1927,11 @@ def query_ivf_index(
         # cell-bounded (see upsert_ivf_index for the cross-cell
         # staleness contract). A legacy index skips the window entirely:
         # one copy per id by construction, no wave column to rank on.
-        index = _keep_latest_per_id(index, id_col, vec_col)
+        index = _keep_latest_per_id(index, id_col, codec.payload(vec_col))
+    if codec.quantized:
+        index = _pin_scoring_parallelism(index)
     indexed = index.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"), "cell"
+        F.col(id_col).alias("neighbor_id"), codec.view(vec_col, "cv"), "cell"
     )
     scored = (
         F.broadcast(probes)
@@ -3923,8 +3566,7 @@ def ivf_recall_report(
     n_probe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    bounds: tuple[list[float], list[float]] | None = None,
-    codebooks: list[tuple[int, int, list[float]]] | None = None,
+    codec: Codec = FLOAT,
 ) -> DataFrame:
     """Recall@k of a PERSISTED IVF index — the lifecycle-aware twin of
     :func:`ann_recall_report`, which measures the LSH path only (the
@@ -3936,38 +3578,14 @@ def ivf_recall_report(
     represent. Run it after upsert waves to measure what centroid
     staleness actually costs at fixed n_probe; the drift trigger
     (:func:`should_rebuild_centroids`) decides when that cost warrants
-    a retrain.
-
-    CODEC-AWARE: a quantized tree routes the approximate side through
-    its own query path (query_sq8/pq_ivf_index with the frozen
-    artifact), so the recall reading INCLUDES the quantization error —
-    the number an operator actually serves at, truth side unchanged
-    (brute force over the live float corpus)."""
+    a retrain. On a quantized tree (its ``codec`` passed) the reading
+    INCLUDES the quantization error — the number an operator actually
+    serves at; the truth side stays brute force over the float corpus."""
     truth = cosine_topk(corpus, queries, k=k, id_col=id_col, vec_col=vec_col)
-    # one schema-only read (footer listing, no data) detects the codec
-    # and validates the artifact with the named error; the decode side
-    # of _codec_view is a lazy closure, so nothing unused is built
-    payload, _ = _codec_view(
-        _read_index(spark, path, "ivf_recall_report").columns,
-        bounds,
-        codebooks,
-        "ivf_recall_report",
+    approx = query_ivf_index(
+        spark, path, centroids, queries,
+        k=k, n_probe=n_probe, id_col=id_col, vec_col=vec_col, codec=codec,
     )
-    if payload == "codes":
-        approx = query_sq8_ivf_index(
-            spark, path, centroids, bounds, queries,
-            k=k, n_probe=n_probe, id_col=id_col, vec_col=vec_col,
-        )
-    elif payload == "pq_codes":
-        approx = query_pq_ivf_index(
-            spark, path, centroids, codebooks, queries,
-            k=k, n_probe=n_probe, id_col=id_col, vec_col=vec_col,
-        )
-    else:
-        approx = query_ivf_index(
-            spark, path, centroids, queries,
-            k=k, n_probe=n_probe, id_col=id_col, vec_col=vec_col,
-        )
     return _grade_recall(truth, approx)
 
 

@@ -26,6 +26,14 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.aggregates import decimal_avg
+from ..operators.similarity import (
+    FLOAT,
+    Codec,
+    ivf_drift_report,
+    query_ivf_index,
+    should_rebuild_centroids,
+    upsert_ivf_index,
+)
 
 
 def _never_landed(exc: AnalysisException) -> bool:
@@ -1245,8 +1253,7 @@ def run_streaming_ivf_upsert(
     drift_monitor_path: str | None = None,
     drift_baseline: dict | None = None,
     report_every: int = 1,
-    bounds: tuple | None = None,
-    codebooks: list | None = None,
+    codec: Codec = FLOAT,
 ) -> StreamingQuery:
     """Live ingest half of the ANN index lifecycle: embedding vectors
     arrive as a stream and land in the persisted IVF index as one
@@ -1296,25 +1303,17 @@ def run_streaming_ivf_upsert(
     the driver over a 1-row collect (the report is a single row by
     construction).
 
-    CODEC DISPATCH (write side, mirroring run_streaming_ann_query's
-    read side): the index schema read once at stream start decides the
-    wave encoder — a ``codes`` tree lands SQ8 waves under the frozen
-    ``bounds``, a ``pq_codes`` tree lands PQ waves under the frozen
-    ``codebooks``, anything else lands float waves; the drift monitor
-    reports over the same codec view. A quantized tree with its
-    artifact missing — or a float tree WITH one (the caller thinks it
-    is quantized: almost certainly the wrong path) — fails fast before
-    the stream starts. A missing index is created by the first wave in
-    the codec the passed artifacts imply."""
+    CODEC (write side, mirroring run_streaming_ann_query's read side):
+    the ``codec`` value (similarity.Codec — FLOAT, or an SQ8/PQ codec
+    holding its frozen artifact) encodes every wave through the one
+    upsert path, and the drift monitor reports over the same codec
+    view. The index schema read once at stream start is checked against
+    it (Codec.check): a tree of another codec, or a legacy cell-only
+    tree, fails fast before the stream starts. A missing index is
+    created by the first wave, in the passed codec."""
     import json as _json
     from pathlib import Path
     from urllib.parse import urlparse
-
-    from ..operators.similarity import (
-        upsert_ivf_index,
-        upsert_pq_ivf_index,
-        upsert_sq8_ivf_index,
-    )
 
     cent_rows = sorted(centroids)
     spark = vectors.sparkSession
@@ -1335,63 +1334,14 @@ def run_streaming_ivf_upsert(
         )
     ckpt_dir = Path(parsed.path if parsed.scheme else checkpoint)
     base_file = ckpt_dir / "ivf_wave_base.json"
-    # one index read at stream start serves BOTH the codec dispatch and
-    # (when the sidecar is missing) the wave-base pin — never per batch
+    # one index read at stream start serves BOTH the codec/layout check
+    # and (when the sidecar is missing) the wave-base pin — never per batch
     try:
         idx = spark.read.parquet(index_path)
     except AnalysisException:
         idx = None  # no index yet: the first wave creates it
     if idx is not None:
-        if "codes" in idx.columns:
-            codec = "sq8"
-        elif "pq_codes" in idx.columns:
-            codec = "pq"
-        else:
-            codec = "float"
-            if bounds is not None or codebooks is not None:
-                raise ValueError(
-                    f"run_streaming_ivf_upsert: index at {index_path} is a "
-                    "FLOAT tree but a quantization artifact was passed — "
-                    "wrong index path, or the tree was rebuilt under a "
-                    "different codec; refusing to ingest float waves the "
-                    "caller believes are quantized"
-                )
-    else:
-        if bounds is not None and codebooks is not None:
-            raise ValueError(
-                "run_streaming_ivf_upsert: both bounds (SQ8) and "
-                "codebooks (PQ) passed for a new index — pick one codec"
-            )
-        codec = (
-            "sq8" if bounds is not None
-            else "pq" if codebooks is not None
-            else "float"
-        )
-    if codec == "sq8" and bounds is None:
-        raise ValueError(
-            f"run_streaming_ivf_upsert: {index_path} is an SQ8 index "
-            "(codes column) — pass its frozen quantization bounds"
-        )
-    if codec == "pq" and codebooks is None:
-        raise ValueError(
-            f"run_streaming_ivf_upsert: {index_path} is a PQ index "
-            "(pq_codes column) — pass its frozen codebooks"
-        )
-    # symmetric with the new-index ambiguity guard: a SPURIOUS second
-    # artifact against an existing quantized tree means the operator
-    # mixed up two indexes' artifacts — refuse before the stream starts
-    if codec == "sq8" and codebooks is not None:
-        raise ValueError(
-            f"run_streaming_ivf_upsert: {index_path} is an SQ8 index but "
-            "PQ codebooks were ALSO passed — artifacts from two different "
-            "indexes? pick the one that matches this tree"
-        )
-    if codec == "pq" and bounds is not None:
-        raise ValueError(
-            f"run_streaming_ivf_upsert: {index_path} is a PQ index but "
-            "SQ8 bounds were ALSO passed — artifacts from two different "
-            "indexes? pick the one that matches this tree"
-        )
+        codec.check(idx.columns, index_path, "run_streaming_ivf_upsert", waves=True)
     if base_file.exists():
         try:
             base_wave = int(_json.loads(base_file.read_text())["base_wave"])
@@ -1416,14 +1366,6 @@ def run_streaming_ivf_upsert(
         if idx is None:  # no index yet: build namespace is wave 0
             base_wave = 0
         else:
-            if "wave" not in idx.columns:
-                raise ValueError(
-                    f"run_streaming_ivf_upsert: index at {index_path} has "
-                    "no wave partition level (pre-round-11 layout); "
-                    "rebuild it with build_ivf_index before streaming "
-                    "upserts — mixing partition layouts in one path is "
-                    "unreadable"
-                )
             base_wave = int(idx.agg(F.max("wave")).first()[0] or 0)
         base_file.parent.mkdir(parents=True, exist_ok=True)
         # atomic publish: a crash between open and write must not leave a
@@ -1437,47 +1379,22 @@ def run_streaming_ivf_upsert(
         tmp.write_text(_json.dumps({"base_wave": base_wave}))
         _os.replace(tmp, base_file)
 
-    # layout/codec verified once at stream start for the checkpoint's
-    # lifetime — per-batch re-listing would pay a file listing per
-    # micro-batch for a check that cannot change (check_layout=False)
-    if codec == "sq8":
-
-        def land(batch: DataFrame, wave: int) -> None:
-            upsert_sq8_ivf_index(
-                batch.select(id_col, vec_col), index_path, cent_rows,
-                bounds, wave=wave, id_col=id_col, vec_col=vec_col,
-                check_layout=False,
-            )
-    elif codec == "pq":
-
-        def land(batch: DataFrame, wave: int) -> None:
-            upsert_pq_ivf_index(
-                batch.select(id_col, vec_col), index_path, cent_rows,
-                codebooks, wave=wave, id_col=id_col, vec_col=vec_col,
-                check_layout=False,
-            )
-    else:
-
-        def land(batch: DataFrame, wave: int) -> None:
-            upsert_ivf_index(
-                batch.select(id_col, vec_col), index_path, cent_rows,
-                wave=wave, id_col=id_col, vec_col=vec_col,
-                check_layout=False,
-            )
-
     def process(batch: DataFrame, batch_id: int) -> None:
-        land(batch, base_wave + batch_id + 1)
+        # layout/codec verified once at stream start for the checkpoint's
+        # lifetime — per-batch re-listing would pay a file listing per
+        # micro-batch for a check that cannot change (check_layout=False)
+        upsert_ivf_index(
+            batch.select(id_col, vec_col), index_path, cent_rows,
+            wave=base_wave + batch_id + 1, id_col=id_col, vec_col=vec_col,
+            check_layout=False, codec=codec,
+        )
         if drift_monitor_path and (batch_id + 1) % max(1, report_every) == 0:
-            from ..operators.similarity import (  # noqa: PLC0415
-                ivf_drift_report,
-                should_rebuild_centroids,
-            )
             from ..operators.upsert import upsert_partitions  # noqa: PLC0415
 
             spark_b = batch.sparkSession
             report = ivf_drift_report(
                 spark_b, index_path, cent_rows, id_col=id_col,
-                vec_col=vec_col, bounds=bounds, codebooks=codebooks,
+                vec_col=vec_col, codec=codec,
             ).first()
             decision = should_rebuild_centroids(
                 report.asDict(), drift_baseline
@@ -1522,8 +1439,7 @@ def run_streaming_ann_query(
     id_col: str = "query_id",
     vec_col: str = "embedding",
     available_now: bool = True,
-    bounds: tuple | None = None,
-    codebooks: list | None = None,
+    codec: Codec = FLOAT,
 ) -> StreamingQuery:
     """Online ANN serving — the READ side of the index lifecycle: query
     vectors arrive as a stream and each micro-batch is answered against
@@ -1551,18 +1467,13 @@ def run_streaming_ann_query(
     index serves fine (query_ivf_index treats it as all build rows) —
     only WRITES are barred from the pre-wave layout.
 
-    CODEC DISPATCH: the index schema read at start also decides the
-    query path — a ``codes`` column routes to query_sq8_ivf_index (pass
-    the frozen ``bounds`` artifact), ``pq_codes`` to query_pq_ivf_index
-    (pass the frozen ``codebooks``), anything else to the float path —
-    so the serving job is unchanged when the operator swaps the index
-    codec; a quantized index with its artifact missing fails fast with
-    the artifact named."""
-    from ..operators.similarity import (
-        query_ivf_index,
-        query_pq_ivf_index,
-        query_sq8_ivf_index,
-    )
+    CODEC: every batch is answered through the one query path under the
+    ``codec`` value (similarity.Codec — FLOAT, or an SQ8/PQ codec holding
+    its frozen artifact), so swapping the index codec changes one
+    argument, not the serving job; the index schema read at start is
+    checked against it (Codec.check) and a mismatch — e.g. a quantized
+    index served without its artifact — fails fast with the artifact
+    named."""
     from ..operators.upsert import upsert_partitions
 
     try:
@@ -1574,37 +1485,8 @@ def run_streaming_ann_query(
             "starting the serving stream"
         ) from exc
 
+    codec.check(index_cols, index_path, "run_streaming_ann_query")
     cent_rows = sorted(centroids)
-    if "codes" in index_cols:
-        if bounds is None:
-            raise ValueError(
-                f"run_streaming_ann_query: {index_path} is an SQ8 index "
-                "(codes column) — pass its frozen quantization bounds"
-            )
-
-        def query_fn(spark_b, qdf):
-            return query_sq8_ivf_index(
-                spark_b, index_path, cent_rows, bounds, qdf,
-                k=k, n_probe=n_probe,
-            )
-    elif "pq_codes" in index_cols:
-        if codebooks is None:
-            raise ValueError(
-                f"run_streaming_ann_query: {index_path} is a PQ index "
-                "(pq_codes column) — pass its frozen codebooks"
-            )
-
-        def query_fn(spark_b, qdf):
-            return query_pq_ivf_index(
-                spark_b, index_path, cent_rows, codebooks, qdf,
-                k=k, n_probe=n_probe,
-            )
-    else:
-
-        def query_fn(spark_b, qdf):
-            return query_ivf_index(
-                spark_b, index_path, cent_rows, qdf, k=k, n_probe=n_probe
-            )
 
     def process(batch: DataFrame, batch_id: int) -> None:
         # cache, not localCheckpoint: the probe collect and the scoring
@@ -1612,17 +1494,22 @@ def run_streaming_ann_query(
         # the blocks deterministically per batch on a continuous stream
         batch = batch.persist()
         try:
-            # alias BOTH columns to the query functions' defaults: the
-            # closures call query_*_ivf_index without id/vec overrides,
-            # so a caller's non-default vec_col must be renamed here or
-            # the first micro-batch dies on an unresolved column AFTER
-            # the checkpoint dir is committed
-            res = query_fn(
+            # alias BOTH columns to the query path's defaults: it is
+            # called without id/vec overrides (those name the INDEX's
+            # columns), so a caller's non-default vec_col must be renamed
+            # here or the first micro-batch dies on an unresolved column
+            # AFTER the checkpoint dir is committed
+            res = query_ivf_index(
                 batch.sparkSession,
+                index_path,
+                cent_rows,
                 batch.select(
                     F.col(id_col).alias("vec_id"),
                     F.col(vec_col).alias("embedding"),
                 ),
+                k=k,
+                n_probe=n_probe,
+                codec=codec,
             )
             upsert_partitions(
                 res.withColumn("batch_id", F.lit(batch_id)),

@@ -641,15 +641,20 @@ def test_unicode_casing_divergence_characterized(spark, duck):
 # --- incremental IVF index (wave upsert + compaction) ------------------------
 
 
-def test_ivf_index_incremental_upsert_equals_full_build(spark, tmp_path):
-    """Serving-shape ANN index lifecycle: build on the first half of the
-    corpus, land the rest as two upsert waves under the FROZEN
-    centroids — queries over the incremental index must equal queries
-    over a one-shot build of the full corpus with the same centroids
-    (cell assignment is a pure function of vector x centroids). Replays
-    of a wave are partition-idempotent; the health report counts waves
-    and compaction debt; compaction collapses to a wave-0 layout that
-    equals the clean build exactly."""
+# the PQ leg alone runs past 15 s (codebook training + the encode join
+# per write), so it rides with the tier-2 certification sweeps
+@pytest.mark.parametrize(
+    "codec_kind", ["float", "sq8", pytest.param("pq", marks=pytest.mark.tier2)]
+)
+def test_ivf_index_incremental_upsert_equals_full_build(spark, tmp_path, codec_kind):
+    """Serving-shape ANN index lifecycle, for every codec: build on the
+    first half of the corpus, land the rest as two upsert waves under
+    the FROZEN centroids and codec artifact — queries over the
+    incremental index must equal queries over a one-shot build of the
+    full corpus with the same artifacts (cell assignment and encoding
+    are pure functions of vector x artifacts). Replays of a wave are
+    partition-idempotent; the health report counts waves and compaction
+    debt."""
     from pyspark.sql import functions as F
 
     from data_pipelines_cu_spark.operators import similarity as sim
@@ -659,28 +664,36 @@ def test_ivf_index_incremental_upsert_equals_full_build(spark, tmp_path):
     w1 = em.filter((F.col("vec_id") % 2 == 1) & (F.col("vec_id") % 4 == 1))
     w2 = em.filter((F.col("vec_id") % 2 == 1) & (F.col("vec_id") % 4 == 3))
     queries = em.filter(F.col("vec_id") < 3)
+    codec = {
+        "float": lambda: sim.FLOAT,
+        "sq8": lambda: sim.Codec.learn_sq8(half),
+        "pq": lambda: sim.Codec.learn_pq(half),
+    }[codec_kind]()
 
     inc_path = str(tmp_path / "ivf_inc")
     full_path = str(tmp_path / "ivf_full")
-    cents = sim.build_ivf_index(half, inc_path, n_centroids=8, lloyd_iters=2)
-    sim.build_ivf_index(em, full_path, centroids=cents)
+    cents = sim.build_ivf_index(
+        half, inc_path, n_centroids=8, lloyd_iters=2, codec=codec
+    )
+    sim.build_ivf_index(em, full_path, centroids=cents, codec=codec)
 
-    sim.upsert_ivf_index(w1, inc_path, cents, wave=1)
-    sim.upsert_ivf_index(w2, inc_path, cents, wave=2)
+    sim.upsert_ivf_index(w1, inc_path, cents, wave=1, codec=codec)
+    sim.upsert_ivf_index(w2, inc_path, cents, wave=2, codec=codec)
 
     def q(path):
         return sorted(
             tuple(r)
             for r in sim.query_ivf_index(
-                spark, path, cents, queries, k=5, n_probe=2
+                spark, path, cents, queries, k=5, n_probe=2, codec=codec
             ).collect()
         )
 
-    assert q(inc_path) == q(full_path) and len(q(inc_path)) > 0
+    full = q(full_path)
+    assert q(inc_path) == full and len(full) > 0
 
     # replay idempotency: re-landing wave 2 changes nothing
-    sim.upsert_ivf_index(w2, inc_path, cents, wave=2)
-    assert q(inc_path) == q(full_path)
+    sim.upsert_ivf_index(w2, inc_path, cents, wave=2, codec=codec)
+    assert q(inc_path) == full
 
     report = {r.cell: r for r in sim.ivf_index_report(spark, inc_path).collect()}
     assert sum(r.n_rows for r in report.values()) == em.count()
@@ -689,7 +702,7 @@ def test_ivf_index_incremental_upsert_equals_full_build(spark, tmp_path):
 
     # wave 0 is the build's namespace — refused
     with pytest.raises(ValueError, match="wave"):
-        sim.upsert_ivf_index(w1, inc_path, cents, wave=0)
+        sim.upsert_ivf_index(w1, inc_path, cents, wave=0, codec=codec)
 
 
 def test_ivf_index_reingest_and_compact(spark, tmp_path):

@@ -616,14 +616,16 @@ def test_compact_wave0_only_index_is_identity(spark, tmp_path):
 
 def test_compact_empty_index_path_raises_descriptively(spark, tmp_path):
     """Compacting a path that never existed is a caller error and fails
-    with Spark's PATH_NOT_FOUND analysis error — loudly, not by minting
-    an empty index."""
+    with the lifecycle's actionable no-readable-index error (wrapping
+    Spark's PATH_NOT_FOUND analysis error) — loudly, not by minting an
+    empty index."""
     from pyspark.errors import AnalysisException
 
     from data_pipelines_cu_spark.operators import similarity as sim
 
-    with pytest.raises(AnalysisException):
+    with pytest.raises(ValueError, match="no readable IVF index") as exc:
         sim.compact_ivf_index(spark, str(tmp_path / "nope"), [(0, [0.0, 0.0])])
+    assert isinstance(exc.value.__cause__, AnalysisException)
 
 
 def test_replayed_wave_after_compaction_resurrects_stale_vector(

@@ -241,23 +241,45 @@ def _stream_vectors(spark, src_dir, rows, start_mtime=1_700_000_000):
     )
 
 
-def test_upsert_ivf_batch_path_rejects_legacy_index(spark, tmp_path):
-    """THE ADVICE medium, closed: the batch write path itself now guards
-    the pre-wave layout — calling upsert_ivf_index directly on a
+@pytest.mark.parametrize(
+    "tree, match",
+    [
+        ("legacy", "no wave partition level"),
+        ("sq8", "SQ8 index .* quantization bounds"),
+        ("pq", "PQ index .* frozen codebooks"),
+    ],
+    ids=["legacy", "sq8", "pq"],
+)
+def test_upsert_ivf_batch_path_rejects_legacy_index(spark, tmp_path, tree, match):
+    """THE ADVICE medium, closed: the batch write path itself guards the
+    tree it writes into — calling upsert_ivf_index directly on a
     cell-only index raises instead of silently writing (cell, wave)
     partitions into a cell-only tree (a mixed layout no reader can
-    open). A missing path stays fine (first wave creates the index)."""
+    open), and a FLOAT wave aimed at a quantized (SQ8/PQ) tree raises
+    instead of landing rows with NULL codes that queries silently skip.
+    The refused write leaves the tree untouched. A missing path stays
+    fine (first wave creates the index)."""
     from pyspark.sql import functions as F
 
     from data_pipelines_cu_spark.operators import similarity as sim
 
     em = _embeddings(spark)
-    legacy = str(tmp_path / "legacy")
+    target = str(tmp_path / tree)
     cents = sim.build_ivf_index(em, str(tmp_path / "tmpbuild"), n_centroids=8)
-    # forge the pre-round-11 layout: cell partitions, no wave level
-    sim.ivf_assign_arrow(
-        em.select("vec_id", "embedding"), sorted(cents)
-    ).write.partitionBy("cell").mode("overwrite").parquet(legacy)
+    if tree == "legacy":
+        # forge the pre-round-11 layout: cell partitions, no wave level
+        sim.ivf_assign_arrow(
+            em.select("vec_id", "embedding"), sorted(cents)
+        ).write.partitionBy("cell").mode("overwrite").parquet(target)
+    else:
+        codec = (
+            sim.Codec.learn_sq8(em) if tree == "sq8"
+            else sim.Codec.learn_pq(em, lloyd_iters=0)  # any artifact will do
+        )
+        sim.build_ivf_index(em, target, centroids=cents, codec=codec)
+    before = sorted(
+        tuple(map(str, r)) for r in spark.read.parquet(target).collect()
+    )
 
     upd = em.limit(3).select(
         "vec_id",
@@ -265,10 +287,12 @@ def test_upsert_ivf_batch_path_rejects_legacy_index(spark, tmp_path):
             "embedding"
         ),
     )
-    with pytest.raises(ValueError, match="no wave partition level"):
-        sim.upsert_ivf_index(upd, legacy, cents, wave=1)
-    # the guarded write never touched the tree: still legacy, still readable
-    assert "wave" not in spark.read.parquet(legacy).columns
+    with pytest.raises(ValueError, match=match):
+        sim.upsert_ivf_index(upd, target, cents, wave=1)
+    # the guarded write never touched the tree: same layout, same rows
+    after = spark.read.parquet(target)
+    assert ("wave" in after.columns) == (tree != "legacy")
+    assert sorted(tuple(map(str, r)) for r in after.collect()) == before
 
     # missing path: the first wave creates the index (wave-layout tree)
     fresh = str(tmp_path / "fresh")
@@ -642,7 +666,7 @@ def test_centroid_drift_trigger_degrade_and_recover(spark, tmp_path):
     assert any("upsert_frac" in r for r in decision["reasons"])
 
     # ...and the gated action recovers: quiesce -> retrain -> fresh serve
-    new_cents = sim.retrain_ivf_centroids(spark, idx, n_centroids=3)
+    new_cents, _ = sim.retrain_ivf_centroids(spark, idx, n_centroids=3)
     recovered = mean_recall(new_cents)
     assert recovered >= 0.9, f"retrain did not recover recall: {recovered}"
     assert recovered > degraded
@@ -801,7 +825,7 @@ def test_streaming_drift_quiesce_retrain_lifecycle(spark, tmp_path):
     # trigger fires; QUIESCE: the availableNow ingest has stopped
     report = sim.ivf_drift_report(spark, idx, cents).first().asDict()
     assert sim.should_rebuild_centroids(report, baseline)["rebuild"]
-    new_cents = sim.retrain_ivf_centroids(spark, idx, n_centroids=3)
+    new_cents, _ = sim.retrain_ivf_centroids(spark, idx, n_centroids=3)
 
     # resume ingest: FRESH checkpoint re-pins base from the rewritten
     # index (max wave 0), so the post-retrain wave lands as wave 1
@@ -1233,7 +1257,9 @@ def test_sq8_persisted_index_lifecycle(spark, tmp_path):
     )
     fidx, qidx = str(tmp_path / "float"), str(tmp_path / "sq8")
     cents = sim.build_ivf_index(em, fidx, n_centroids=8, lloyd_iters=2)
-    cents_q, bounds = sim.build_sq8_ivf_index(em, qidx, centroids=cents)
+    sq8 = sim.Codec.learn_sq8(em)
+    cents_q = sim.build_ivf_index(em, qidx, centroids=cents, codec=sq8)
+    bounds = sq8.bounds
     assert cents_q == cents
 
     def tree_bytes(p):
@@ -1249,8 +1275,8 @@ def test_sq8_persisted_index_lifecycle(spark, tmp_path):
     queries = em.filter(F.col("vec_id") < 5)
     got = sorted(
         tuple(r)
-        for r in sim.query_sq8_ivf_index(
-            spark, qidx, cents, bounds, queries, k=5, n_probe=2
+        for r in sim.query_ivf_index(
+            spark, qidx, cents, queries, k=5, n_probe=2, codec=sq8
         ).collect()
     )
     # in-plan oracle: float queries vs reconstructed corpus, same probes
@@ -1313,20 +1339,20 @@ def test_sq8_persisted_index_lifecycle(spark, tmp_path):
             "embedding"
         ),
     )
-    sim.upsert_sq8_ivf_index(upd, qidx, cents, bounds, wave=1)
+    sim.upsert_ivf_index(upd, qidx, cents, wave=1, codec=sq8)
     landed = spark.read.parquet(qidx)
     assert landed.filter("vec_id = 0").count() >= 2  # both waves on disk
     # the zeroed vector has no cosine: id 0 drops out of every top-k
-    post = sim.query_sq8_ivf_index(
-        spark, qidx, cents, bounds, queries, k=5, n_probe=2
+    post = sim.query_ivf_index(
+        spark, qidx, cents, queries, k=5, n_probe=2, codec=sq8
     )
     assert post.filter("neighbor_id = 0").count() == 0
 
     # guards
     with pytest.raises(ValueError, match="wave must be >= 1"):
-        sim.upsert_sq8_ivf_index(upd, qidx, cents, bounds, wave=0)
+        sim.upsert_ivf_index(upd, qidx, cents, wave=0, codec=sq8)
     with pytest.raises(ValueError, match="not an SQ8 wave index"):
-        sim.upsert_sq8_ivf_index(upd, fidx, cents, bounds, wave=1)
+        sim.upsert_ivf_index(upd, fidx, cents, wave=1, codec=sq8)
 
 
 @pytest.mark.tier2
@@ -1348,7 +1374,9 @@ def test_pq_persisted_index_lifecycle(spark, tmp_path):
     )
     fidx, pidx = str(tmp_path / "float"), str(tmp_path / "pq")
     cents = sim.build_ivf_index(em, fidx, n_centroids=8, lloyd_iters=2)
-    cents_p, codebooks = sim.build_pq_ivf_index(em, pidx, centroids=cents)
+    pq = sim.Codec.learn_pq(em)
+    cents_p = sim.build_ivf_index(em, pidx, centroids=cents, codec=pq)
+    codebooks = pq.codebooks
     assert cents_p == cents
     assert len(codebooks) == sim.PQ_M * sim.PQ_K
 
@@ -1364,8 +1392,8 @@ def test_pq_persisted_index_lifecycle(spark, tmp_path):
     queries = em.filter(F.col("vec_id") < 5)
     got = sorted(
         tuple(r)
-        for r in sim.query_pq_ivf_index(
-            spark, pidx, cents, codebooks, queries, k=5, n_probe=2
+        for r in sim.query_ivf_index(
+            spark, pidx, cents, queries, k=5, n_probe=2, codec=pq
         ).collect()
     )
     assert len(got) > 0
@@ -1449,28 +1477,28 @@ def test_pq_persisted_index_lifecycle(spark, tmp_path):
     # vector — its codes become id 0's, so its reconstruction ties id 0's
     v0 = [float(x) for x in em.filter("vec_id = 0").first()["embedding"]]
     upd = spark.createDataFrame([(1, v0)], "vec_id long, embedding array<float>")
-    sim.upsert_pq_ivf_index(upd, pidx, cents, codebooks, wave=1)
-    post = sim.query_pq_ivf_index(
-        spark, pidx, cents, codebooks, queries.filter("vec_id = 0"),
-        k=1, n_probe=2,
+    sim.upsert_ivf_index(upd, pidx, cents, wave=1, codec=pq)
+    post = sim.query_ivf_index(
+        spark, pidx, cents, queries.filter("vec_id = 0"),
+        k=1, n_probe=2, codec=pq,
     ).first()
     assert post["neighbor_id"] == 1  # identical reconstruction, id ASC tie
 
     # guards
     with pytest.raises(ValueError, match="wave must be >= 1"):
-        sim.upsert_pq_ivf_index(upd, pidx, cents, codebooks, wave=0)
+        sim.upsert_ivf_index(upd, pidx, cents, wave=0, codec=pq)
     with pytest.raises(ValueError, match="not a PQ wave index"):
-        sim.upsert_pq_ivf_index(upd, fidx, cents, codebooks, wave=1)
+        sim.upsert_ivf_index(upd, fidx, cents, wave=1, codec=pq)
 
 
 def test_quantized_index_compaction_and_serving_dispatch(spark, tmp_path):
     """Quantized-tree compaction + codec dispatch in the serving stream:
     a cross-cell update in an SQ8 index reconciles at compaction (stale
     copy gone, codes carried through unchanged, post-compact queries
-    identical to pre-compact at full probe); the serving stream detects
-    the index codec from its schema and answers an SQ8 index identically
-    to the batch query path; a quantized index without its artifact
-    fails fast with the artifact named."""
+    identical to pre-compact at full probe); the serving stream answers
+    an SQ8 index under its codec identically to the batch query path; a
+    quantized index served without its codec fails fast with the
+    artifact named."""
     from pyspark.sql import functions as F
 
     from data_pipelines_cu_spark.operators import similarity as sim
@@ -1482,7 +1510,8 @@ def test_quantized_index_compaction_and_serving_dispatch(spark, tmp_path):
         .select("vec_id", "embedding")
     )
     qidx = str(tmp_path / "sq8")
-    cents, bounds = sim.build_sq8_ivf_index(em, qidx, n_centroids=8, lloyd_iters=2)
+    sq8 = sim.Codec.learn_sq8(em)
+    cents = sim.build_ivf_index(em, qidx, n_centroids=8, lloyd_iters=2, codec=sq8)
 
     # cross-cell update: negate a vector; its new copy lands in a new
     # cell, the stale one stays behind until compaction
@@ -1490,7 +1519,7 @@ def test_quantized_index_compaction_and_serving_dispatch(spark, tmp_path):
         "vec_id",
         F.transform("embedding", lambda x: (-x).cast("float")).alias("embedding"),
     )
-    sim.upsert_sq8_ivf_index(moved, qidx, cents, bounds, wave=1)
+    sim.upsert_ivf_index(moved, qidx, cents, wave=1, codec=sq8)
     pre = spark.read.parquet(qidx)
     assert pre.filter("vec_id = 3").count() == 2  # both copies on disk
 
@@ -1498,25 +1527,25 @@ def test_quantized_index_compaction_and_serving_dispatch(spark, tmp_path):
     full_probe = len(cents)
     pre_rows = sorted(
         tuple(r)
-        for r in sim.query_sq8_ivf_index(
-            spark, qidx, cents, bounds, queries, k=5, n_probe=full_probe
+        for r in sim.query_ivf_index(
+            spark, qidx, cents, queries, k=5, n_probe=full_probe, codec=sq8
         ).collect()
     )
-    sim.compact_sq8_ivf_index(spark, qidx, cents, bounds)
+    sim.compact_ivf_index(spark, qidx, cents, codec=sq8)
     post = spark.read.parquet(qidx)
     assert post.filter("vec_id = 3").count() == 1  # stale copy reconciled
     assert post.filter("wave > 0").count() == 0
     post_rows = sorted(
         tuple(r)
-        for r in sim.query_sq8_ivf_index(
-            spark, qidx, cents, bounds, queries, k=5, n_probe=full_probe
+        for r in sim.query_ivf_index(
+            spark, qidx, cents, queries, k=5, n_probe=full_probe, codec=sq8
         ).collect()
     )
     # at full probe the keep-last answer is probe-layout-independent:
     # compaction must not change any result
     assert post_rows == pre_rows
 
-    # serving stream auto-dispatches on the codes column
+    # serving stream answers through the same path under the codec value
     rows = [
         (r["vec_id"], [float(x) for x in r["embedding"]])
         for r in queries.collect()
@@ -1525,7 +1554,7 @@ def test_quantized_index_compaction_and_serving_dispatch(spark, tmp_path):
     res = str(tmp_path / "res")
     assert run_streaming_ann_query(
         qs, qidx, cents, res, str(tmp_path / "ck"),
-        k=5, n_probe=2, id_col="vec_id", bounds=bounds,
+        k=5, n_probe=2, id_col="vec_id", codec=sq8,
     ).awaitTermination(120)
     got = sorted(
         (r["query_id"], r["rank"], r["neighbor_id"])
@@ -1533,8 +1562,8 @@ def test_quantized_index_compaction_and_serving_dispatch(spark, tmp_path):
     )
     want = sorted(
         (r["query_id"], r["rank"], r["neighbor_id"])
-        for r in sim.query_sq8_ivf_index(
-            spark, qidx, cents, bounds, queries, k=5, n_probe=2
+        for r in sim.query_ivf_index(
+            spark, qidx, cents, queries, k=5, n_probe=2, codec=sq8
         ).collect()
     )
     assert got == want and len(got) > 0
@@ -1563,18 +1592,19 @@ def test_pq_index_compaction_reconciles_cross_cell(spark, tmp_path):
         .select("vec_id", "embedding")
     )
     pidx = str(tmp_path / "pq")
-    cents, codebooks = sim.build_pq_ivf_index(em, pidx, n_centroids=8)
+    pq = sim.Codec.learn_pq(em)
+    cents = sim.build_ivf_index(em, pidx, n_centroids=8, codec=pq)
     moved = em.filter(F.col("vec_id") == 3).select(
         "vec_id",
         F.transform("embedding", lambda x: (-x).cast("float")).alias("embedding"),
     )
-    sim.upsert_pq_ivf_index(moved, pidx, cents, codebooks, wave=1)
+    sim.upsert_ivf_index(moved, pidx, cents, wave=1, codec=pq)
     queries = em.filter(F.col("vec_id") < 5)
     full_probe = len(cents)
     pre_rows = sorted(
         tuple(r)
-        for r in sim.query_pq_ivf_index(
-            spark, pidx, cents, codebooks, queries, k=5, n_probe=full_probe
+        for r in sim.query_ivf_index(
+            spark, pidx, cents, queries, k=5, n_probe=full_probe, codec=pq
         ).collect()
     )
     codes_pre = {
@@ -1584,7 +1614,7 @@ def test_pq_index_compaction_reconciles_cross_cell(spark, tmp_path):
         .select("vec_id", "pq_codes")
         .collect()
     }
-    sim.compact_pq_ivf_index(spark, pidx, cents, codebooks)
+    sim.compact_ivf_index(spark, pidx, cents, codec=pq)
     post = spark.read.parquet(pidx)
     assert post.filter("vec_id = 3").count() == 1
     assert post.filter("wave > 0").count() == 0
@@ -1593,8 +1623,8 @@ def test_pq_index_compaction_reconciles_cross_cell(spark, tmp_path):
     assert list(kept) == codes_pre[3]
     post_rows = sorted(
         tuple(r)
-        for r in sim.query_pq_ivf_index(
-            spark, pidx, cents, codebooks, queries, k=5, n_probe=full_probe
+        for r in sim.query_ivf_index(
+            spark, pidx, cents, queries, k=5, n_probe=full_probe, codec=pq
         ).collect()
     )
     assert post_rows == pre_rows
@@ -1620,23 +1650,26 @@ def test_pq_geometry_guards_and_duplicate_batch(spark, tmp_path):
     )
     # (a) non-default geometry end-to-end: m=8 subspaces of 8 dims
     pidx = str(tmp_path / "pq88")
-    cents, codebooks = sim.build_pq_ivf_index(
-        em, pidx, n_centroids=8, m=8, dsub=8, k=8
-    )
+    pq = sim.Codec.learn_pq(em, m=8, dsub=8, k=8)
+    cents = sim.build_ivf_index(em, pidx, n_centroids=8, codec=pq)
+    codebooks = pq.codebooks
     assert sim._pq_geometry(codebooks) == (8, 8)
     upd = em.filter(F.col("vec_id") == 7)
-    sim.upsert_pq_ivf_index(upd, pidx, cents, codebooks, wave=1)
+    sim.upsert_ivf_index(upd, pidx, cents, wave=1, codec=pq)
     got = spark.read.parquet(pidx).filter("vec_id = 7 and wave = 1").first()
     assert len(got["pq_codes"]) == 8
-    res = sim.query_pq_ivf_index(
-        spark, pidx, cents, codebooks, em.filter(F.col("vec_id") < 3), k=3
+    res = sim.query_ivf_index(
+        spark, pidx, cents, em.filter(F.col("vec_id") < 3), k=3, codec=pq
     )
     assert res.count() > 0
 
     # (b) wrong-dim vectors: loud plan-side failure, not silent garbage
     short = em.select("vec_id", F.slice("embedding", 1, 32).alias("embedding"))
     with pytest.raises(Exception, match="PQ geometry mismatch"):
-        sim.build_pq_ivf_index(short, str(tmp_path / "bad"), n_centroids=4)
+        sim.build_ivf_index(
+            short, str(tmp_path / "bad"), n_centroids=4,
+            codec=sim.Codec.learn_pq(short),
+        )
 
     # (c) duplicate id, two different vectors in ONE wave: each keeps its
     # own codes — compare against encoding each vector alone
@@ -1646,7 +1679,7 @@ def test_pq_geometry_guards_and_duplicate_batch(spark, tmp_path):
         F.transform("embedding", lambda x: (-x).cast("float")).alias("embedding"),
     )
     dup = v7.unionAll(neg7)
-    sim.upsert_pq_ivf_index(dup, pidx, cents, codebooks, wave=2)
+    sim.upsert_ivf_index(dup, pidx, cents, wave=2, codec=pq)
     landed = spark.read.parquet(pidx).filter("vec_id = 7 and wave = 2")
     assert landed.count() == 2
     cent_df = sim._pq_codebook_df(spark, codebooks)
@@ -1674,7 +1707,8 @@ def test_quantized_compaction_refuses_corrupt_codes(spark, tmp_path):
         .select("vec_id", "embedding")
     )
     pidx = str(tmp_path / "pq")
-    cents, codebooks = sim.build_pq_ivf_index(em, pidx, n_centroids=8)
+    pq = sim.Codec.learn_pq(em)
+    cents = sim.build_ivf_index(em, pidx, n_centroids=8, codec=pq)
     # forge a corrupt wave: code 99 exists in no 16-cell codebook
     corrupt = spark.createDataFrame(
         [(9001, [99, 0, 0, 0], 0, 1)], "vec_id long, pq_codes array<int>, cell int, wave int"
@@ -1682,22 +1716,22 @@ def test_quantized_compaction_refuses_corrupt_codes(spark, tmp_path):
     corrupt.write.partitionBy("cell", "wave").mode("append").parquet(pidx)
 
     queries = em.filter(F.col("vec_id") < 3)
-    res = sim.query_pq_ivf_index(
-        spark, pidx, cents, codebooks, queries, k=5, n_probe=len(cents)
+    res = sim.query_ivf_index(
+        spark, pidx, cents, queries, k=5, n_probe=len(cents), codec=pq
     )
     bad_hits = res.filter(F.col("neighbor_id") == 9001).collect()
     assert all(r["cos_sim"] is None for r in bad_hits)  # never a real score
 
     with pytest.raises(ValueError, match="failed to reconstruct"):
-        sim.compact_pq_ivf_index(spark, pidx, cents, codebooks)
+        sim.compact_ivf_index(spark, pidx, cents, codec=pq)
     # the corrupt row is still there — nothing was laundered
     assert spark.read.parquet(pidx).filter("vec_id = 9001").count() == 1
 
     # missing path: the shared _read_index contract, not a raw
     # AnalysisException
     with pytest.raises(ValueError, match="no readable IVF index"):
-        sim.compact_pq_ivf_index(
-            spark, str(tmp_path / "nowhere"), cents, codebooks
+        sim.compact_ivf_index(
+            spark, str(tmp_path / "nowhere"), cents, codec=pq
         )
 
 
@@ -1748,7 +1782,7 @@ def test_streaming_ann_query_nondefault_vec_col(spark, tmp_path):
 def test_streaming_quantized_ingest_dispatch(spark, tmp_path):
     """Write-side codec dispatch, mirroring the serving stream's read
     side: a streaming ingest against an SQ8 tree lands CODE waves
-    (schema-detected, encoded under the frozen bounds) identical to the
+    (encoded by the SQ8 codec under its frozen bounds) identical to the
     batch upsert path, the continuous drift monitor reports over the
     reconstruction view, and the artifact/codec mismatches fail fast
     before the stream starts."""
@@ -1759,11 +1793,12 @@ def test_streaming_quantized_ingest_dispatch(spark, tmp_path):
 
     original, wave1, wave2 = _drift_fixture(spark)
     sidx = str(tmp_path / "sq8")
-    cents, bounds = sim.build_sq8_ivf_index(
-        original, sidx, n_centroids=2, lloyd_iters=2
+    sq8 = sim.Codec.learn_sq8(original)
+    cents = sim.build_ivf_index(
+        original, sidx, n_centroids=2, lloyd_iters=2, codec=sq8
     )
     baseline = sim.ivf_drift_report(
-        spark, sidx, cents, bounds=bounds
+        spark, sidx, cents, codec=sq8
     ).first().asDict()
 
     rows1 = [(r["vec_id"], [float(x) for x in r["embedding"]]) for r in wave1.collect()]
@@ -1774,7 +1809,7 @@ def test_streaming_quantized_ingest_dispatch(spark, tmp_path):
     monitor = str(tmp_path / "monitor")
     assert run_streaming_ivf_upsert(
         stream, sidx, cents, str(tmp_path / "ck"),
-        drift_monitor_path=monitor, drift_baseline=baseline, bounds=bounds,
+        drift_monitor_path=monitor, drift_baseline=baseline, codec=sq8,
     ).awaitTermination(120)
 
     landed = spark.read.parquet(sidx)
@@ -1783,9 +1818,9 @@ def test_streaming_quantized_ingest_dispatch(spark, tmp_path):
 
     # parity with the batch write path: same codes for the same rows
     bidx = str(tmp_path / "batch")
-    sim.build_sq8_ivf_index(original, bidx, centroids=cents, bounds=bounds)
-    sim.upsert_sq8_ivf_index(wave1, bidx, cents, bounds, wave=1)
-    sim.upsert_sq8_ivf_index(wave2, bidx, cents, bounds, wave=2)
+    sim.build_ivf_index(original, bidx, centroids=cents, codec=sq8)
+    sim.upsert_ivf_index(wave1, bidx, cents, wave=1, codec=sq8)
+    sim.upsert_ivf_index(wave2, bidx, cents, wave=2, codec=sq8)
     got = sorted(
         (r["vec_id"], r["cell"], r["wave"], tuple(r["codes"]))
         for r in landed.collect()
@@ -1803,8 +1838,8 @@ def test_streaming_quantized_ingest_dispatch(spark, tmp_path):
     assert last["n_vectors"] == original.count() + len(rows1) + len(rows2)
     assert last["upsert_frac"] > 0
 
-    # guards: quantized tree without its artifact; float tree WITH one;
-    # ambiguous artifacts for a new path — all before the stream starts
+    # guards: quantized tree without its codec; float tree WITH one — all
+    # before the stream starts
     qs = _stream_vectors(spark, tmp_path / "g1", rows1[:1])
     with pytest.raises(ValueError, match="SQ8 index .* quantization bounds"):
         run_streaming_ivf_upsert(qs, sidx, cents, str(tmp_path / "ckg1"))
@@ -1812,12 +1847,7 @@ def test_streaming_quantized_ingest_dispatch(spark, tmp_path):
     sim.build_ivf_index(original, fidx, centroids=cents)
     with pytest.raises(ValueError, match="FLOAT tree but a quantization"):
         run_streaming_ivf_upsert(
-            qs, fidx, cents, str(tmp_path / "ckg2"), bounds=bounds
-        )
-    with pytest.raises(ValueError, match="pick one codec"):
-        run_streaming_ivf_upsert(
-            qs, str(tmp_path / "new"), cents, str(tmp_path / "ckg3"),
-            bounds=bounds, codebooks=[(0, 0, [0.0, 0.0])],
+            qs, fidx, cents, str(tmp_path / "ckg2"), codec=sq8
         )
 
 
@@ -1827,8 +1857,8 @@ def test_quantized_drift_degrade_and_recover(spark, tmp_path):
     degrade -> mechanical trigger -> retrain -> recover arc runs
     end-to-end on a QUANTIZED tree — drift report and recall report
     read the reconstruction view (what serving actually scores), and
-    retrain_quantized_ivf mints fresh centroids AND fresh quantization
-    artifacts from the survivor reconstructions."""
+    retrain_ivf_centroids mints fresh centroids AND a fresh quantization
+    codec from the survivor reconstructions."""
     from pyspark.sql import functions as F
 
     from data_pipelines_cu_spark.operators import similarity as sim
@@ -1839,44 +1869,44 @@ def test_quantized_drift_degrade_and_recover(spark, tmp_path):
     # learned from `original` would clamp the drift family's signature
     # dims (zero in the build corpus) to [0,0] — saturation destroys
     # that information AT INGEST, and no retrain-from-codes can recover
-    # it (the documented SQ8 trade; retrain_quantized_ivf's docstring
+    # it (the documented SQ8 trade; retrain_ivf_centroids's docstring
     # pins it). This test isolates the retrain MECHANICS from it.
-    wide = ([0.0] * 8, [1.6] * 8)
-    cents, bounds = sim.build_sq8_ivf_index(
-        original, idx, n_centroids=2, lloyd_iters=2, bounds=wide
+    sq8 = sim.Codec.sq8(([0.0] * 8, [1.6] * 8))
+    cents = sim.build_ivf_index(
+        original, idx, n_centroids=2, lloyd_iters=2, codec=sq8
     )
     baseline = sim.ivf_drift_report(
-        spark, idx, cents, bounds=bounds
+        spark, idx, cents, codec=sq8
     ).first().asDict()
     assert not sim.should_rebuild_centroids(baseline, baseline)["rebuild"]
 
-    sim.upsert_sq8_ivf_index(wave1, idx, cents, bounds, wave=1)
-    sim.upsert_sq8_ivf_index(wave2, idx, cents, bounds, wave=2)
+    sim.upsert_ivf_index(wave1, idx, cents, wave=1, codec=sq8)
+    sim.upsert_ivf_index(wave2, idx, cents, wave=2, codec=sq8)
 
     live = original.unionByName(wave1).unionByName(wave2)
     queries = wave1.filter(F.col("vec_id") < 8)
 
-    def mean_recall(c, b):
+    def mean_recall(c, codec):
         rep = sim.ivf_recall_report(
-            spark, idx, c, live, queries, k=5, n_probe=1, bounds=b
+            spark, idx, c, live, queries, k=5, n_probe=1, codec=codec
         )
         return float(rep.agg(F.avg("recall")).first()[0])
 
-    degraded = mean_recall(cents, bounds)
+    degraded = mean_recall(cents, sq8)
     assert degraded <= 0.75, f"drift did not degrade recall: {degraded}"
 
-    report = sim.ivf_drift_report(spark, idx, cents, bounds=bounds).first().asDict()
+    report = sim.ivf_drift_report(spark, idx, cents, codec=sq8).first().asDict()
     decision = sim.should_rebuild_centroids(report, baseline)
     assert decision["rebuild"], (report, baseline)
 
-    new_cents, new_bounds = sim.retrain_quantized_ivf(
-        spark, idx, n_centroids=3, bounds=bounds
+    new_cents, new_sq8 = sim.retrain_ivf_centroids(
+        spark, idx, n_centroids=3, codec=sq8
     )
-    recovered = mean_recall(new_cents, new_bounds)
+    recovered = mean_recall(new_cents, new_sq8)
     assert recovered >= 0.85, f"retrain did not recover recall: {recovered}"
     assert recovered > degraded
     fresh = sim.ivf_drift_report(
-        spark, idx, new_cents, bounds=new_bounds
+        spark, idx, new_cents, codec=new_sq8
     ).first().asDict()
     assert not sim.should_rebuild_centroids(fresh, fresh)["rebuild"]
     assert fresh["upsert_frac"] == 0.0
@@ -1887,7 +1917,7 @@ def test_retrain_quantized_pq_and_codec_guards(spark, tmp_path):
     """PQ leg of the quantized retrain (fresh codebooks of the SAME
     geometry, seeded from the k lowest SURVIVING ids — the builder's
     id<k rule does not hold for survivors) plus the codec guards: a
-    float tree refuses the quantized retrain, and the codec-aware
+    float tree refuses a quantized codec's retrain, and the codec-aware
     reports name the missing artifact."""
     from pyspark.sql import functions as F
 
@@ -1895,15 +1925,14 @@ def test_retrain_quantized_pq_and_codec_guards(spark, tmp_path):
 
     original, wave1, _ = _drift_fixture(spark)
     pidx = str(tmp_path / "pq")
-    cents, codebooks = sim.build_pq_ivf_index(
-        original, pidx, n_centroids=2, m=4, dsub=2, k=8
-    )
-    sim.upsert_pq_ivf_index(wave1, pidx, cents, codebooks, wave=1)
+    pq = sim.Codec.learn_pq(original, m=4, dsub=2, k=8)
+    cents = sim.build_ivf_index(original, pidx, n_centroids=2, codec=pq)
+    sim.upsert_ivf_index(wave1, pidx, cents, wave=1, codec=pq)
 
-    new_cents, new_codebooks = sim.retrain_quantized_ivf(
-        spark, pidx, n_centroids=3, codebooks=codebooks
+    new_cents, new_pq = sim.retrain_ivf_centroids(
+        spark, pidx, n_centroids=3, codec=pq
     )
-    assert sim._pq_geometry(new_codebooks) == (4, 2)
+    assert sim._pq_geometry(new_pq.codebooks) == (4, 2)
     post = spark.read.parquet(pidx)
     assert post.filter("wave > 0").count() == 0  # fresh wave 0
     live_ids = {r[0] for r in original.select("vec_id").collect()} | {
@@ -1911,16 +1940,16 @@ def test_retrain_quantized_pq_and_codec_guards(spark, tmp_path):
     }
     assert post.count() == len(live_ids)
     queries = original.filter(F.col("vec_id") < 2)
-    res = sim.query_pq_ivf_index(
-        spark, pidx, new_cents, new_codebooks, queries, k=3,
-        n_probe=len(new_cents),
+    res = sim.query_ivf_index(
+        spark, pidx, new_cents, queries, k=3,
+        n_probe=len(new_cents), codec=new_pq,
     )
     assert res.count() > 0 and res.filter("cos_sim is null").count() == 0
 
     fidx = str(tmp_path / "float")
     sim.build_ivf_index(original, fidx, centroids=cents)
-    with pytest.raises(ValueError, match="use\\s+retrain_ivf_centroids"):
-        sim.retrain_quantized_ivf(spark, fidx, codebooks=codebooks)
+    with pytest.raises(ValueError, match="FLOAT tree but a quantization"):
+        sim.retrain_ivf_centroids(spark, fidx, codec=pq)
     with pytest.raises(ValueError, match="pass its frozen codebooks"):
         sim.ivf_drift_report(spark, pidx, new_cents)
     with pytest.raises(ValueError, match="pass its frozen codebooks"):
@@ -1931,7 +1960,7 @@ def test_retrain_quantized_pq_and_codec_guards(spark, tmp_path):
     # included, still a valid [0,1] recall
     rec = sim.ivf_recall_report(
         spark, pidx, new_cents, original.unionByName(wave1), queries,
-        k=3, n_probe=len(new_cents), codebooks=new_codebooks,
+        k=3, n_probe=len(new_cents), codec=new_pq,
     )
     vals = [r["recall"] for r in rec.collect()]
     assert vals and all(0.0 <= v <= 1.0 for v in vals)
@@ -1988,7 +2017,7 @@ def test_quantized_retrain_guards(spark, tmp_path):
     rebuild's drop_null_vectors would otherwise silently delete it from
     the new tree (permanent data loss, no error); (b) an empty tree
     refuses with the survivor-set named, not a raw IndexError from the
-    codebook seeder; (c) a spurious second artifact against an existing
+    codebook seeder; (c) another index's codec against an existing
     quantized tree stops the ingest stream before it starts."""
     from pyspark.sql import functions as F
 
@@ -2001,40 +2030,43 @@ def test_quantized_retrain_guards(spark, tmp_path):
         .select("vec_id", "embedding")
     )
     pidx = str(tmp_path / "pq")
-    cents, codebooks = sim.build_pq_ivf_index(em, pidx, n_centroids=8)
+    pq = sim.Codec.learn_pq(em)
+    cents = sim.build_ivf_index(em, pidx, n_centroids=8, codec=pq)
     corrupt = spark.createDataFrame(
         [(9001, [99, 0, 0, 0], 0, 1)],
         "vec_id long, pq_codes array<int>, cell int, wave int",
     )
     corrupt.write.partitionBy("cell", "wave").mode("append").parquet(pidx)
     with pytest.raises(ValueError, match="failed to reconstruct"):
-        sim.retrain_quantized_ivf(spark, pidx, codebooks=codebooks)
+        sim.retrain_ivf_centroids(spark, pidx, codec=pq)
 
     empty = str(tmp_path / "empty")
     spark.createDataFrame(
         [], "vec_id long, codes array<int>, cell int, wave int"
     ).write.parquet(empty)
-    bounds = ([0.0] * 4, [1.0] * 4)
     with pytest.raises(ValueError, match="no surviving vectors"):
-        sim.retrain_quantized_ivf(spark, empty, bounds=bounds)
+        sim.retrain_ivf_centroids(
+            spark, empty, codec=sim.Codec.sq8(([0.0] * 4, [1.0] * 4))
+        )
 
     sidx = str(tmp_path / "sq8")
-    scents, sbounds = sim.build_sq8_ivf_index(em, sidx, n_centroids=8)
+    scents = sim.build_ivf_index(
+        em, sidx, n_centroids=8, codec=sim.Codec.learn_sq8(em)
+    )
     rows = [(1, [0.0] * 64)]
     qs = _stream_vectors(spark, tmp_path / "src", rows)
-    with pytest.raises(ValueError, match="PQ codebooks were ALSO passed"):
+    with pytest.raises(ValueError, match="SQ8 index .* but a PQ codec"):
         run_streaming_ivf_upsert(
-            qs, sidx, scents, str(tmp_path / "ck"),
-            bounds=sbounds, codebooks=codebooks,
+            qs, sidx, scents, str(tmp_path / "ck"), codec=pq,
         )
 
 
 def test_streaming_ann_query_serves_pq_index(spark, tmp_path):
     """PQ leg of the serving stream's codec dispatch (the SQ8 leg is
     pinned in test_quantized_index_compaction_and_serving_dispatch):
-    pq_codes routes through query_pq_ivf_index with the frozen
-    codebooks, parity with the batch query path; missing codebooks
-    fail fast with the artifact named."""
+    the PQ codec value serves through the one query path, parity with
+    the batch query path; a missing codec fails fast with the artifact
+    named."""
     from pyspark.sql import functions as F
 
     from data_pipelines_cu_spark.operators import similarity as sim
@@ -2046,7 +2078,8 @@ def test_streaming_ann_query_serves_pq_index(spark, tmp_path):
         .select("vec_id", "embedding")
     )
     pidx = str(tmp_path / "pq")
-    cents, codebooks = sim.build_pq_ivf_index(em, pidx, n_centroids=8)
+    pq = sim.Codec.learn_pq(em)
+    cents = sim.build_ivf_index(em, pidx, n_centroids=8, codec=pq)
     queries = em.filter(F.col("vec_id") < 5)
     rows = [
         (r["vec_id"], [float(x) for x in r["embedding"]])
@@ -2056,7 +2089,7 @@ def test_streaming_ann_query_serves_pq_index(spark, tmp_path):
     res = str(tmp_path / "res")
     assert run_streaming_ann_query(
         qs, pidx, cents, res, str(tmp_path / "ck"),
-        k=5, n_probe=2, id_col="vec_id", codebooks=codebooks,
+        k=5, n_probe=2, id_col="vec_id", codec=pq,
     ).awaitTermination(120)
     got = sorted(
         (r["query_id"], r["rank"], r["neighbor_id"])
@@ -2064,8 +2097,8 @@ def test_streaming_ann_query_serves_pq_index(spark, tmp_path):
     )
     want = sorted(
         (r["query_id"], r["rank"], r["neighbor_id"])
-        for r in sim.query_pq_ivf_index(
-            spark, pidx, cents, codebooks, queries, k=5, n_probe=2
+        for r in sim.query_ivf_index(
+            spark, pidx, cents, queries, k=5, n_probe=2, codec=pq
         ).collect()
     )
     assert got == want and len(got) > 0
@@ -2096,10 +2129,12 @@ def test_quantized_builders_degenerate_paths(spark, tmp_path):
     schema = "vec_id long, embedding array<float>"
     all_null = spark.createDataFrame([(7, None)], schema)
     for name, fn in (
-        ("sq8", lambda: sim.build_sq8_ivf_index(
-            all_null, str(tmp_path / "sq8"), n_centroids=2)),
-        ("pq", lambda: sim.build_pq_ivf_index(
-            all_null, str(tmp_path / "pq"), n_centroids=2)),
+        ("sq8", lambda: sim.build_ivf_index(
+            all_null, str(tmp_path / "sq8"), n_centroids=2,
+            codec=sim.Codec.learn_sq8(all_null))),
+        ("pq", lambda: sim.build_ivf_index(
+            all_null, str(tmp_path / "pq"), n_centroids=2,
+            codec=sim.Codec.learn_pq(all_null))),
         ("float", lambda: sim.build_ivf_index(
             all_null, str(tmp_path / "float"), n_centroids=2)),
         ("frontier", lambda: sim.index_codec_frontier(
@@ -2115,11 +2150,12 @@ def test_quantized_builders_degenerate_paths(spark, tmp_path):
         .select("vec_id", "embedding")
     )
     sidx, pidx = str(tmp_path / "s2"), str(tmp_path / "p2")
-    cents, bounds = sim.build_sq8_ivf_index(em, sidx, n_centroids=8)
-    _, codebooks = sim.build_pq_ivf_index(em, pidx, centroids=cents)
+    sq8, pq = sim.Codec.learn_sq8(em), sim.Codec.learn_pq(em)
+    cents = sim.build_ivf_index(em, sidx, n_centroids=8, codec=sq8)
+    sim.build_ivf_index(em, pidx, centroids=cents, codec=pq)
     n_s, n_p = (spark.read.parquet(p).count() for p in (sidx, pidx))
-    sim.upsert_sq8_ivf_index(all_null, sidx, cents, bounds, wave=1)
-    sim.upsert_pq_ivf_index(all_null, pidx, cents, codebooks, wave=1)
+    sim.upsert_ivf_index(all_null, sidx, cents, wave=1, codec=sq8)
+    sim.upsert_ivf_index(all_null, pidx, cents, wave=1, codec=pq)
     assert spark.read.parquet(sidx).count() == n_s
     assert spark.read.parquet(pidx).count() == n_p
 

@@ -43,6 +43,30 @@ def test_widen_scan_rooted_probe_is_job_free(spark, tmp_path):
     assert widened is not narrow  # 1 split < defaultParallelism -> widened
 
 
+def test_widen_matches_barrier_node_names_not_column_names(spark, tmp_path):
+    """The barrier check compares each optimized-plan line's NODE name
+    against the barrier list — a column whose name merely contains one
+    (``Joined``, ``SortKey``, ``Windowed``) no longer blocks the widening
+    of a narrow scan-rooted frame, while a real join still passes
+    through untouched with no job fired."""
+    par = spark.sparkContext.defaultParallelism
+    for col in ("k", "Joined", "SortKey", "Windowed"):
+        p = str(tmp_path / f"{col}.parquet")
+        spark.range(10).withColumnRenamed("id", col).coalesce(1).write.parquet(p)
+        narrow = spark.read.parquet(p)
+        assert narrow.rdd.getNumPartitions() == 1
+        widened = sim._widen_if_narrow(narrow)
+        assert widened.rdd.getNumPartitions() == par, col
+
+    left = spark.read.parquet(str(tmp_path / "k.parquet"))
+    right = spark.read.parquet(str(tmp_path / "Joined.parquet"))
+    joined = left.join(right, left["k"] == right["Joined"])
+    before = _job_count(spark)
+    out = sim._widen_if_narrow(joined)
+    assert out is joined, "a join frame must pass through untouched"
+    assert _job_count(spark) == before, "the barrier check ran a job"
+
+
 def test_pyspark_debugging_cache_internal_still_exists():
     """ensure_session_confs flips pyspark's process-local debugging-cache
     flag (the call-site-capture fast path). The attribute is a pyspark
