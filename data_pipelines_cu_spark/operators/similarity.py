@@ -55,6 +55,28 @@ def drop_null_vectors(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     (0,)-dim axis error. Found by the all-NULL-column sweep."""
     return df.filter(F.col(vec_col).isNotNull())
 
+
+def _cos_sim() -> Column:
+    """The score of the float twins: cosine(qv, cv) rounded to 6 dp."""
+    return F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim")
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """THE ranking tail of every top-k operator. ``scored`` is
+    (query_id, neighbor_id, score, *reported): self pairs drop, each
+    query keeps its k best neighbors by ``score`` DESC with ties to the
+    lowest neighbor id (deterministic), and the output is ``scored``'s
+    columns plus ``rank``."""
+    score = scored.columns[2]
+    return topk_per_group(
+        scored.filter(F.col("query_id") != F.col("neighbor_id")),
+        ["query_id"],
+        [F.col(score).desc(), F.col("neighbor_id").asc()],
+        k=k,
+        rank_col="rank",
+    ).select(*scored.columns, "rank")
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -69,22 +91,7 @@ def cosine_topk(
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
     )
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-    scored = (
-        q.crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
-        )
-    )
-    return topk_per_group(
-        scored,
-        ["query_id"],
-        [F.col("cos_sim").desc(), F.col("neighbor_id").asc()],
-        k=k,
-        rank_col="rank",
-    ).select("query_id", "neighbor_id", "cos_sim", "rank")
+    return _rank_topk(q.crossJoin(c).select("query_id", "neighbor_id", _cos_sim()), k)
 
 
 def sign_lsh_bucket(vec: Column, n_bits: int = 8) -> Column:
@@ -231,23 +238,10 @@ def cosine_topk_lsh(
         planes,
         vec_col="cv",
     )
-    scored = (
-        F.broadcast(q)
-        .join(c, "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
-        )
+    scored = F.broadcast(q).join(c, "bucket").select(
+        "query_id", "neighbor_id", _cos_sim()
     )
-    return topk_per_group(
-        scored,
-        ["query_id"],
-        [F.col("cos_sim").desc(), F.col("neighbor_id").asc()],
-        k=k,
-        rank_col="rank",
-    ).select("query_id", "neighbor_id", "cos_sim", "rank")
+    return _rank_topk(scored, k)
 
 
 def probe_buckets(bucket: Column, n_bits: int = 8) -> Column:
@@ -297,23 +291,10 @@ def cosine_topk_lsh_multiprobe(
         planes,
         vec_col="cv",
     )
-    scored = (
-        F.broadcast(q)
-        .join(c, "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
-        )
+    scored = F.broadcast(q).join(c, "bucket").select(
+        "query_id", "neighbor_id", _cos_sim()
     )
-    return topk_per_group(
-        scored,
-        ["query_id"],
-        [F.col("cos_sim").desc(), F.col("neighbor_id").asc()],
-        k=k,
-        rank_col="rank",
-    ).select("query_id", "neighbor_id", "cos_sim", "rank")
+    return _rank_topk(scored, k)
 
 
 def cosine_topk_arrow(
@@ -376,47 +357,7 @@ def cosine_topk_arrow(
     scored = corpus.select(id_col, vec_col).mapInPandas(
         score, schema="query_id long, neighbor_id long, cos_sim double"
     )
-    scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
-    return topk_per_group(
-        scored,
-        ["query_id"],
-        [F.col("cos_sim").desc(), F.col("neighbor_id").asc()],
-        k=k,
-        rank_col="rank",
-    ).select("query_id", "neighbor_id", "cos_sim", "rank")
-
-
-def ivf_assign(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    out_col: str = "cell",
-    n_best: int = 1,
-    centroid_id_col: str = "vec_id",
-    centroid_vec_col: str = "embedding",
-) -> DataFrame:
-    """Assign each vector to its ``n_best`` nearest centroid cells by cosine
-    (argmax via row_number; ties break on centroid id). The centroid set is
-    broadcast — at 100 TB the corpus scan stays partition-local and the only
-    shuffle is whatever the caller does with the cells."""
-    c = F.broadcast(
-        centroids.select(
-            F.col(centroid_id_col).alias(out_col),
-            F.col(centroid_vec_col).alias("_centroid_v"),
-        )
-    )
-    scored = vectors.crossJoin(c).withColumn(
-        "_cscore", cosine(F.col(vec_col), F.col("_centroid_v"))
-    )
-    best = topk_per_group(
-        scored,
-        [id_col],
-        [F.col("_cscore").desc(), F.col(out_col).asc()],
-        k=n_best,
-        rank_col="_crank",
-    )
-    return best.drop("_centroid_v", "_cscore", "_crank")
+    return _rank_topk(scored, k)
 
 
 # Optimized-logical-plan node names that imply an exchange (or an
@@ -488,13 +429,14 @@ def ivf_assign_arrow(
     n_best: int = 1,
     widen: bool = False,
 ) -> DataFrame:
-    """Arrow fast path for ``ivf_assign``: centroids arrive as a collected
-    (cell_id, vector) list — small BY CONTRACT (the index's cell count, not
-    corpus data) — and each corpus batch scores against the centroid matrix
-    with the j-sequential cosine kernel, emitting the ``n_best`` cells per
-    row (score DESC, cell ASC — stable argsort reproduces the column
-    variant's tie-break). The corpus scan stays partition-local; nothing
-    shuffles until the caller uses the cells."""
+    """Assign each vector its ``n_best`` nearest centroid cells by cosine.
+    Centroids arrive as a collected (cell_id, vector) list — small BY
+    CONTRACT (the index's cell count, not corpus data) — and each corpus
+    batch scores against the centroid matrix with the j-sequential cosine
+    kernel, emitting the ``n_best`` cells per row (score DESC, ties to the
+    lowest cell — a stable argsort over the cell-sorted matrix). The
+    corpus scan stays partition-local; nothing shuffles until the caller
+    uses the cells."""
     import numpy as np  # noqa: PLC0415
     from pyspark.sql import types as T  # noqa: PLC0415
 
@@ -522,40 +464,27 @@ def ivf_assign_arrow(
     return vectors.mapInPandas(fn, schema=schema)
 
 
-def lloyd_refine(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    n_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+def _centroid_mean(
+    assigned: DataFrame, keys: tuple[str, ...], vec_col: str
 ) -> DataFrame:
-    """Deterministic Lloyd iterations: assign every corpus vector to its
-    nearest centroid (cosine), recompute each cell's centroid as the
-    element-wise mean of its members, repeat. Returns (cell, cv) with cell
-    keeping the seed centroid's id.
-
-    The per-component mean uses the decimal-sum discipline
-    (aggregates.decimal_avg) so refined centroids are bit-identical across
-    partitionings AND in the DuckDB oracle twin — which unrolls the same
-    iterations as CTEs. Each iteration is one Arrow centroid-assign pass
-    (partition-local, no shuffle) plus one 512-group aggregate (n_cells ×
-    dim); the tiny centroid set is collected between rounds (index
-    metadata, not corpus data), truncating lineage so iteration i+1 never
-    re-executes iteration i. Refinement cost per round is independent of
-    partition layout and linear in corpus size for the scan. Empty cells
-    drop out, exactly as in the oracle's inner aggregation.
-    """
-    rows = lloyd_refine_rows(
-        corpus,
-        [
-            (r[0], [float(x) for x in r[1]])
-            for r in centroids.select(id_col, vec_col).collect()
-        ],
-        n_iters=n_iters,
-        vec_col=vec_col,
+    """THE centroid-mean rule of every Lloyd round — IVF/k-means cells,
+    the distributed large-k path and the PQ subspace codebooks: (*keys,
+    cv), the element-wise mean of each group's member vectors. Each
+    component averages under the decimal-sum discipline
+    (aggregates.decimal_avg), so centroids are bit-identical across
+    partitionings AND in the DuckDB twins' unrolled Lloyd CTEs. A group
+    with no members has no row (empty cells drop out, as in the
+    oracles)."""
+    means = (
+        assigned.select(*keys, F.posexplode(F.col(vec_col)).alias("pos", "val"))
+        .groupBy(*keys, "pos")
+        .agg(decimal_avg(F.col("val").cast("double")).alias("m"))
     )
-    return corpus.sparkSession.createDataFrame(
-        [(c, v) for c, v in rows], "cell bigint, cv array<double>"
+    return means.groupBy(*keys).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", "m"))),
+            lambda x: x["m"],
+        ).alias("cv")
     )
 
 
@@ -565,28 +494,88 @@ def lloyd_refine_rows(
     n_iters: int = 2,
     vec_col: str = "embedding",
 ) -> list[tuple[int, list[float]]]:
-    """Lloyd iterations over collected centroid rows (see lloyd_refine)."""
+    """Deterministic Lloyd iterations over collected centroid rows:
+    assign every corpus vector to its nearest centroid (cosine),
+    recompute each cell's centroid (:func:`_centroid_mean`), repeat.
+    Returns sorted (cell, vector) rows, cells keeping their seed ids.
+    Each round is one Arrow centroid-assign pass (partition-local, no
+    shuffle) plus one (n_cells x dim)-group aggregate; the tiny centroid
+    set is collected between rounds (index metadata, not corpus data),
+    so round i+1 never re-executes round i."""
     cent_rows = sorted(seed_rows)
     for _ in range(n_iters):
         assigned = ivf_assign_arrow(
             corpus.select(vec_col), cent_rows, vec_col=vec_col, widen=True
         )
-        exploded = assigned.select(
-            "cell", F.posexplode(F.col(vec_col)).alias("pos", "val")
-        )
-        means = exploded.groupBy("cell", "pos").agg(
-            decimal_avg(F.col("val").cast("double")).alias("m")
-        )
-        cent_df = means.groupBy("cell").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda x: x["m"],
-            ).alias("cv")
-        )
+        cent_df = _centroid_mean(assigned, ("cell",), vec_col)
         cent_rows = sorted(
             (r["cell"], [float(x) for x in r["cv"]]) for r in cent_df.collect()
         )
     return cent_rows
+
+
+def _seed_centroids(
+    corpus: DataFrame,
+    n_centroids: int,
+    lloyd_iters: int,
+    id_col: str,
+    vec_col: str,
+    refuse: str | None = None,
+) -> list[tuple[int, list[float]]]:
+    """THE centroid-training rule of every IVF and k-means path (the
+    in-memory twins, k-means, the index build, retrain and frontier):
+    seeds are the ``n_centroids`` lowest-id non-NULL vectors (one
+    collect of ``orderBy(id).limit(n)``, so a corpus whose ids do not
+    start at 0 still seeds), refined by ``lloyd_iters`` rounds of
+    :func:`lloyd_refine_rows` — RNG-free, so a rebuilt index never
+    silently disagrees with the one it replaces and the DuckDB twins
+    reproduce it exactly. Returns sorted (cell, vector) rows. A corpus
+    with no non-NULL vector returns no centroids, or raises
+    ``ValueError(refuse)`` when the caller passes a refusal message (a
+    build over nothing would write an empty tree and return an empty
+    artifact with no error anywhere)."""
+    seeds = (
+        drop_null_vectors(corpus, vec_col)
+        .filter(F.col(id_col).isNotNull())
+        .select(id_col, vec_col)
+        .orderBy(id_col)
+        .limit(n_centroids)
+    )
+    seed_rows = [(r[0], [float(x) for x in r[1]]) for r in seeds.collect()]
+    if not seed_rows and refuse:
+        raise ValueError(refuse)
+    return lloyd_refine_rows(corpus, seed_rows, n_iters=lloyd_iters, vec_col=vec_col)
+
+
+def _query_probes(
+    queries: DataFrame,
+    cent_rows: list[tuple[int, list[float]]],
+    n_probe: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """THE query-side probe assignment of every IVF path: (query_id, qv,
+    cell), one row per query and each of its ``n_probe`` nearest
+    cells."""
+    return ivf_assign_arrow(
+        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")),
+        sorted(cent_rows),
+        vec_col="qv",
+        n_best=n_probe,
+    )
+
+
+def _probe_scored(probes: DataFrame, indexed: DataFrame, *scores: Column) -> DataFrame:
+    """Score each query against the index rows of its probed cells —
+    the broadcast probe join of every IVF path: (query_id, neighbor_id,
+    *scores), one row per pair (a pair can surface via several probed
+    cells)."""
+    return (
+        F.broadcast(probes)
+        .join(indexed, "cell")
+        .select("query_id", "neighbor_id", *scores)
+        .dropDuplicates(["query_id", "neighbor_id"])
+    )
 
 
 def cosine_topk_ivf(
@@ -601,57 +590,28 @@ def cosine_topk_ivf(
 ) -> DataFrame:
     """IVF ANN: corpus vectors are inverted-file-indexed by nearest centroid;
     each query scores only the corpus cells of its ``n_probe`` nearest
-    centroids. Deterministic seeding — the ``n_centroids`` lowest-id vectors
-    refined by ``lloyd_iters`` Lloyd rounds (decimal-mean, RNG-free) — so the
-    index and the DuckDB oracle are exactly reproducible. Cost:
-    corpus×centroids (broadcast, linear) + per-query work ~
-    n_probe/n_centroids of the corpus instead of all of it.
+    centroids. Deterministic seeding — the ``n_centroids`` lowest-id
+    vectors refined by ``lloyd_iters`` Lloyd rounds (decimal-mean,
+    RNG-free, :func:`_seed_centroids`) — so the index and the DuckDB
+    oracle are exactly reproducible. Cost: corpus×centroids (broadcast,
+    linear) + per-query work ~ n_probe/n_centroids of the corpus instead
+    of all of it.
 
-    At scale the assignment step is materialized once (`ivf_assign` output
-    written partitioned BY cell) and amortized across query batches.
+    At scale the assignment step is materialized once
+    (:func:`build_ivf_index` writes it partitioned BY cell) and amortized
+    across query batches (:func:`query_ivf_index`).
     """
     corpus = drop_null_vectors(corpus, vec_col)
     queries = drop_null_vectors(queries, vec_col)
-    seeds = corpus.filter(F.col(id_col) < n_centroids).select(id_col, vec_col)
-    seed_rows = [
-        (r[0], [float(x) for x in r[1]]) for r in seeds.collect()
-    ]  # n_centroids rows by contract — index metadata, never corpus-sized
-    cent_rows = (
-        lloyd_refine_rows(corpus, seed_rows, n_iters=lloyd_iters, vec_col=vec_col)
-        if lloyd_iters > 0
-        else sorted(seed_rows)
-    )
+    cent_rows = _seed_centroids(corpus, n_centroids, lloyd_iters, id_col, vec_col)
     indexed = ivf_assign_arrow(
         corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
         cent_rows,
         vec_col="cv",
         widen=True,
     )
-    probes = ivf_assign_arrow(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")),
-        cent_rows,
-        vec_col="qv",
-        n_best=n_probe,
-    )
-    scored = (
-        F.broadcast(probes)
-        .join(indexed, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
-        )
-        # a (query, neighbor) pair can surface via several probed cells
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    return topk_per_group(
-        scored,
-        ["query_id"],
-        [F.col("cos_sim").desc(), F.col("neighbor_id").asc()],
-        k=k,
-        rank_col="rank",
-    ).select("query_id", "neighbor_id", "cos_sim", "rank")
+    probes = _query_probes(queries, cent_rows, n_probe, id_col, vec_col)
+    return _rank_topk(_probe_scored(probes, indexed, _cos_sim()), k)
 
 
 # --- oracle SQL twins --------------------------------------------------------
@@ -663,6 +623,16 @@ def _cos_sql(av: str, bv: str) -> str:
     na = f"sqrt(list_sum([CAST({av}[i] AS DOUBLE) * CAST({av}[i] AS DOUBLE) for i in range(1, len({av}) + 1)]))"
     nb = f"sqrt(list_sum([CAST({bv}[i] AS DOUBLE) * CAST({bv}[i] AS DOUBLE) for i in range(1, len({bv}) + 1)]))"
     return f"(CASE WHEN ({na} * {nb}) > 0 THEN {d} / ({na} * {nb}) END)"
+
+
+def _seed_sql(table: str, id_col: str, n: int | str) -> str:
+    """DuckDB twin of :func:`_seed_centroids`' seed rule: the ``n``
+    lowest-id non-NULL vectors as (cell, cv)."""
+    return (
+        f"SELECT {id_col} AS cell, embedding AS cv FROM {table} "
+        f"WHERE {id_col} IS NOT NULL AND embedding IS NOT NULL "
+        f"ORDER BY {id_col} LIMIT {n}"
+    )
 
 
 def cosine_topk_oracle_sql(
@@ -682,13 +652,6 @@ def cosine_topk_oracle_sql(
             FROM scored)
     SELECT query_id, neighbor_id, cos_sim, rank FROM ranked WHERE rank <= {k}
     """
-
-
-def sign_bucket_sql(vec: str, n_bits: int = 8) -> str:
-    bits = " || ".join(
-        f"(CASE WHEN {vec}[{i + 1}] >= 0 THEN '1' ELSE '0' END)" for i in range(n_bits)
-    )
-    return f"({bits})"
 
 
 def hyperplane_bucket_sql(
@@ -724,11 +687,7 @@ def cosine_topk_ivf_oracle_sql(
     division as the Spark side, so refined centroids are bit-equal."""
     cos_assign = _cos_sql("v.emb", "cent.cv")
     cos_score = _cos_sql("p.qv", "ix.cv")
-    ctes = [
-        f"""cent0 AS (
-        SELECT vec_id AS cell, embedding AS cv FROM {table}
-        WHERE vec_id < {n_centroids})"""
-    ]
+    ctes = [f"cent0 AS ({_seed_sql(table, 'vec_id', n_centroids)})"]
     for i in range(1, lloyd_iters + 1):
         ctes.append(f"""la{i} AS (
         SELECT * FROM (
@@ -840,35 +799,6 @@ def cosine_topk_lsh_oracle_sql(
 
 # --- Persisted IVF index -----------------------------------------------------
 
-def _seed_centroids(
-    corpus: DataFrame,
-    n_centroids: int,
-    lloyd_iters: int,
-    id_col: str,
-    vec_col: str,
-) -> list[tuple[int, list[float]]]:
-    """THE centroid-training rule of the index build, whatever its codec:
-    deterministic seeds (the n lowest-id vectors) refined by the
-    order-independent Lloyd pass — a rebuilt index never silently
-    disagrees with the one it replaces. An empty seed set — empty corpus
-    after NULL-vector admission, or every id outside the seed range —
-    refuses loudly: continuing would write an empty/garbage tree and
-    return an empty artifact with no error anywhere."""
-    seeds = corpus.filter(F.col(id_col) < n_centroids).select(id_col, vec_col)
-    seed_rows = [(r[0], [float(x) for x in r[1]]) for r in seeds.collect()]
-    if not seed_rows:
-        raise ValueError(
-            f"_seed_centroids: no seed vectors ({id_col} < {n_centroids} "
-            "matched nothing) — empty corpus after the NULL-vector "
-            "admission rule, or ids outside the seed range"
-        )
-    return (
-        lloyd_refine_rows(corpus, seed_rows, n_iters=lloyd_iters, vec_col=vec_col)
-        if lloyd_iters > 0
-        else sorted(seed_rows)
-    )
-
-
 PQ_M = 4
 PQ_K = 16
 
@@ -906,16 +836,7 @@ def _pq_encode(
     sub = _pq_subvecs(
         src, m=m, dsub=dsub, id_col=id_col, vec_col=vec_col, carry=("_vkey",)
     )
-    return (
-        _pq_assign_codes(sub, cent, keys=(id_col, "_vkey"))
-        .groupBy(id_col, "_vkey")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("j", "cell"))),
-                lambda x: x["cell"],
-            ).alias("pq_codes")
-        )
-    )
+    return _pq_code_arrays(sub, cent, keys=(id_col, "_vkey"))
 
 
 def _pq_decode_expr(codebooks: list[tuple[int, int, list[float]]]):
@@ -1053,10 +974,7 @@ class Codec:
             vec_col=vec_col,
             seed_ids=seed_ids,
         )
-        codebooks = sorted(
-            (r["j"], r["cell"], [float(x) for x in r["cv"]])
-            for r in cb_df.collect()  # m*k rows — artifact, never corpus
-        )
+        codebooks = _collect_codebooks(cb_df)
         if not codebooks:
             raise ValueError(
                 "Codec.learn_pq: corpus has no non-NULL vectors to learn "
@@ -1192,6 +1110,11 @@ class Codec:
 
 FLOAT = Codec()
 
+_NO_SEEDS = (
+    "{op}: no seed vectors — the corpus has no non-NULL vector after the "
+    "NULL-vector admission rule; nothing to index"
+)
+
 
 def _write_tree(indexed: DataFrame, path: str) -> None:
     """Write a whole (cell, wave)-partitioned tree. Static overwrite
@@ -1241,7 +1164,8 @@ def build_ivf_index(
         cent_rows = sorted(centroids)
     else:
         cent_rows = _seed_centroids(
-            corpus, n_centroids, lloyd_iters, id_col, vec_col
+            corpus, n_centroids, lloyd_iters, id_col, vec_col,
+            refuse=_NO_SEEDS.format(op="build_ivf_index"),
         )
     indexed = codec.encode(corpus, cent_rows, id_col, vec_col)
     _write_tree(indexed.withColumn("wave", F.lit(0)), path)
@@ -1672,17 +1596,10 @@ def retrain_ivf_centroids(
     )
     if codec.quantized:
         _refuse_corrupt_codes(latest, codec, path, op)
-    seeds = latest.orderBy(id_col).limit(n_centroids)
-    seed_rows = [(r[0], [float(x) for x in r[1]]) for r in seeds.collect()]
-    if not seed_rows:
-        raise ValueError(
-            f"{op}: index at {path} has no surviving vectors to retrain "
-            "from (empty tree?) — there is nothing to re-seed Lloyd with"
-        )
-    new_cents = (
-        lloyd_refine_rows(latest, seed_rows, n_iters=lloyd_iters, vec_col=work)
-        if lloyd_iters > 0
-        else sorted(seed_rows)
+    new_cents = _seed_centroids(
+        latest, n_centroids, lloyd_iters, id_col, work,
+        refuse=f"{op}: index at {path} has no surviving vectors to retrain "
+        "from (empty tree?) — there is nothing to re-seed Lloyd with",
     )
     new_codec = codec.relearn(latest, lloyd_iters, id_col, work)
     build_ivf_index(
@@ -1718,14 +1635,7 @@ def ivf_probe_sweep(
     ).transform(lineage_cut)
     rows = []
     for n_probe in probes:
-        probed = ivf_assign_arrow(
-            queries.select(
-                F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-            ),
-            sorted(centroids),
-            vec_col="qv",
-            n_best=n_probe,
-        )
+        probed = _query_probes(queries, centroids, n_probe, id_col, vec_col)
         n_cells = probed.select("cell").distinct().count()
         graded = _grade_recall(
             truth,
@@ -1811,7 +1721,10 @@ def index_codec_frontier(
     # distinct-collect action) and one broadcast per codec — ~7
     # traversals; cut them for the same reason as the corpus
     queries = queries.select(id_col, vec_col).transform(lineage_cut)
-    cents = _seed_centroids(corpus, n_centroids, lloyd_iters, id_col, vec_col)
+    cents = _seed_centroids(
+        corpus, n_centroids, lloyd_iters, id_col, vec_col,
+        refuse=_NO_SEEDS.format(op="index_codec_frontier"),
+    )
     truth = cosine_topk(
         corpus, queries, k=k, id_col=id_col, vec_col=vec_col
     ).transform(lineage_cut)
@@ -1911,12 +1824,7 @@ def query_ivf_index(
     exchange."""
     raw = _read_index(spark, path, "query_ivf_index")
     codec.check(raw.columns, path, "query_ivf_index")
-    probes = ivf_assign_arrow(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")),
-        sorted(centroids),
-        vec_col="qv",
-        n_best=n_probe,
-    )
+    probes = _query_probes(queries, centroids, n_probe, id_col, vec_col)
     probe_cells = sorted({r["cell"] for r in probes.select("cell").distinct().collect()})
     index = raw.filter(F.col("cell").isin(probe_cells))
     if "wave" in index.columns:
@@ -1933,24 +1841,7 @@ def query_ivf_index(
     indexed = index.select(
         F.col(id_col).alias("neighbor_id"), codec.view(vec_col, "cv"), "cell"
     )
-    scored = (
-        F.broadcast(probes)
-        .join(indexed, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
-        )
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    return topk_per_group(
-        scored,
-        ["query_id"],
-        [F.col("cos_sim").desc(), F.col("neighbor_id").asc()],
-        k=k,
-        rank_col="rank",
-    ).select("query_id", "neighbor_id", "cos_sim", "rank")
+    return _rank_topk(_probe_scored(probes, indexed, _cos_sim()), k)
 
 
 def cosine_topk_seq_arrow(
@@ -1991,14 +1882,7 @@ def cosine_topk_seq_arrow(
     scored = corpus.select(id_col, vec_col).mapInPandas(
         score, schema="query_id long, neighbor_id long, cos_sim double"
     )
-    scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
-    return topk_per_group(
-        scored,
-        ["query_id"],
-        [F.col("cos_sim").desc(), F.col("neighbor_id").asc()],
-        k=k,
-        rank_col="rank",
-    ).select("query_id", "neighbor_id", "cos_sim", "rank")
+    return _rank_topk(scored, k)
 
 
 def knn_label_predict(
@@ -2256,13 +2140,7 @@ def kmeans_assign(
     if n_clusters is None:
         n_clusters = derived_n_clusters(corpus.count(), target_cluster_size)
     if n_clusters <= distributed_threshold:
-        seeds = corpus.filter(F.col(id_col) < n_clusters).select(id_col, vec_col)
-        seed_rows = [(r[0], [float(x) for x in r[1]]) for r in seeds.collect()]
-        cent_rows = (
-            lloyd_refine_rows(corpus, seed_rows, n_iters=lloyd_iters, vec_col=vec_col)
-            if lloyd_iters > 0
-            else sorted(seed_rows)
-        )
+        cent_rows = _seed_centroids(corpus, n_clusters, lloyd_iters, id_col, vec_col)
         return ivf_assign_arrow(
             corpus, cent_rows, vec_col=vec_col, out_col=out_col, widen=True
         )
@@ -2270,6 +2148,9 @@ def kmeans_assign(
     # --- large-k path: centroids never materialize on the driver ---
     import math  # noqa: PLC0415
 
+    # seeds stay the in-plan id < k rule here: collecting (or globally
+    # sorting) the k lowest ids is exactly the driver/single-task
+    # materialization this path exists to avoid
     seeds_df = corpus.filter(F.col(id_col) < n_clusters).select(
         F.col(id_col).alias("cell"), F.col(vec_col).cast("array<double>").alias("cv")
     )
@@ -2286,18 +2167,7 @@ def kmeans_assign(
             id_col=id_col, vec_col=vec_col,
         )
         merged = assigned.join(corpus.select(id_col, vec_col), id_col)
-        exploded = merged.select(
-            "cell", F.posexplode(F.col(vec_col)).alias("pos", "val")
-        )
-        means = exploded.groupBy("cell", "pos").agg(
-            decimal_avg(F.col("val").cast("double")).alias("m")
-        )
-        cent_df = means.groupBy("cell").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda x: x["m"],
-            ).alias("cv")
-        )
+        cent_df = _centroid_mean(merged, ("cell",), vec_col)
         # truncate lineage between rounds (k rows, distributed — the
         # collected path's between-round collect, without the driver)
         cent_df = cent_df.transform(lineage_cut)
@@ -2321,11 +2191,7 @@ def kmeans_clusters_oracle_sql(
     the same arithmetic the engine runs, so the twins stay in lockstep."""
     cos_assign = _cos_sql("v.emb", "cent.cv")
     k_expr = _n_clusters_sql(n_clusters, target_cluster_size, table)
-    ctes = [
-        f"""cent0 AS (
-        SELECT {id_col} AS cell, embedding AS cv FROM {table}
-        WHERE {id_col} < {k_expr})"""
-    ]
+    ctes = [f"cent0 AS ({_seed_sql(table, id_col, k_expr)})"]
     for i in range(1, lloyd_iters + 1):
         ctes.append(f"""la{i} AS (
         SELECT * FROM (
@@ -2635,55 +2501,75 @@ def cosine_topk_sq8(
     that compression.
     """
     b = F.broadcast(sq8_bounds(corpus, vec_col=vec_col, dim=dim))
-    # Precompute per-row norms BEFORE the pair join (the semantic_dedup
-    # trick): norm(x) is pair-independent, so inlining it in the cosine
-    # would recompute the same 64-term fold n_queries times per corpus
-    # row. Same sequential fold + sqrt → bit-identical to inline cosine.
     v = corpus.crossJoin(b).select(
         F.col(id_col),
         F.col(vec_col).alias("v"),
         sq8_reconstruct(F.col(vec_col), F.col("mn"), F.col("mx")).alias("rv"),
-    ).withColumn("vn", norm(F.col("v"))).withColumn("rn", norm(F.col("rv")))
+    )
+    return _error_ranked(v, "sq8", k, n_queries, id_col, symmetric=True)
+
+
+def _error_ranked(
+    v: DataFrame,
+    name: str,
+    k: int,
+    n_queries: int,
+    id_col: str,
+    symmetric: bool = False,
+) -> DataFrame:
+    """THE error-reporting scorer and ranking of the compressed twins.
+    ``v`` is (id, v, rv): each vector and its reconstruction. The first
+    ``n_queries`` ids (broadcast) score every row of ``v``: ``cos_<name>``
+    ranks — the query (its reconstruction too when ``symmetric``, else
+    exact: asymmetric ADC) against the candidate's reconstruction — and
+    the exact cosine and |error| ride along: (query_id, neighbor_id,
+    cos_<name>, cos_exact, abs_err, rank). Per-row norms are
+    precomputed before the pair join (the semantic_dedup trick): norm(x)
+    is pair-independent, and the same sequential fold + sqrt is
+    bit-identical to inline cosine."""
+    v = v.withColumn("vn", norm(F.col("v"))).withColumn("rn", norm(F.col("rv")))
+    # the query side's last two columns are the ones that score crv
+    q_cols = ("v", "vn", "rv", "rn") if symmetric else ("v", "vn")
     q = F.broadcast(
         v.filter(F.col(id_col) < n_queries).select(
             F.col(id_col).alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("rv").alias("qrv"),
-            F.col("vn").alias("qvn"),
-            F.col("rn").alias("qrn"),
+            *[F.col(c).alias("q" + c) for c in q_cols],
         )
     )
     c = v.select(
         F.col(id_col).alias("neighbor_id"),
-        F.col("v").alias("cv"),
-        F.col("rv").alias("crv"),
-        F.col("vn").alias("cvn"),
-        F.col("rn").alias("crn"),
+        *[F.col(c).alias("c" + c) for c in ("v", "rv", "vn", "rn")],
     )
-    cos_q = F.try_divide(
-        dot(F.col("qrv"), F.col("crv")), F.col("qrn") * F.col("crn")
+    scored = q.crossJoin(c).select(
+        "query_id", "neighbor_id", *_error_scores(name, *q_cols[-2:])
     )
-    cos_x = F.try_divide(
-        dot(F.col("qv"), F.col("cv")), F.col("qvn") * F.col("cvn")
+    return _rank_topk(scored, k)
+
+
+def _no_error_rows(spark, name: str) -> DataFrame:
+    """The empty :func:`_error_ranked` report of a twin with nothing to
+    rank (no vector to learn its codebooks from)."""
+    return spark.createDataFrame(
+        [], f"query_id long, neighbor_id long, cos_{name} double, "
+        "cos_exact double, abs_err double, rank int",
     )
-    scored = (
-        q.crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cos_q, 6).alias("cos_sq8"),
-            F.round(cos_x, 6).alias("cos_exact"),
-            F.round(F.abs(cos_q - cos_x), 6).alias("abs_err"),
-        )
-    )
-    return topk_per_group(
-        scored,
-        ["query_id"],
-        [F.col("cos_sq8").desc(), F.col("neighbor_id").asc()],
-        k=k,
-        rank_col="rank",
-    ).select("query_id", "neighbor_id", "cos_sq8", "cos_exact", "abs_err", "rank")
+
+
+def _error_scores(name: str, q: str = "v", qn: str = "vn") -> list[Column]:
+    """(cos_<name>, cos_exact, abs_err), each rounded to 6 dp, over a
+    pair row carrying the query (``qv``, norm ``qvn``; ``q<q>``/``q<qn>``
+    is the side that scores the reconstruction) and the candidate
+    (exact ``cv``/``cvn``, reconstruction ``crv``/``crn``)."""
+    def cos(a: str, an: str, b: str, bn: str) -> Column:
+        return F.try_divide(dot(F.col(a), F.col(b)), F.col(an) * F.col(bn))
+
+    approx = cos("q" + q, "q" + qn, "crv", "crn")
+    exact = cos("qv", "qvn", "cv", "cvn")
+    return [
+        F.round(approx, 6).alias(f"cos_{name}"),
+        F.round(exact, 6).alias("cos_exact"),
+        F.round(F.abs(approx - exact), 6).alias("abs_err"),
+    ]
 
 
 def _sq8_recon_sql(vec: str, dim: int = 64) -> str:
@@ -2928,7 +2814,9 @@ def pq_codebooks(
     Scale: assignment joins the (N*m)-row subvector stream against a
     BROADCAST m*k-row codebook; means shuffle (m*k*dsub) cells. Production
     PQ trains on a sample — the full-corpus pass here is the exactness the
-    oracle gate needs, and it is still linear in N."""
+    oracle gate needs, and it is still linear in N. Lineage is cut between
+    rounds, not after the last one: every caller collects the m*k rows
+    (:func:`_collect_codebooks`), so a final cut would be one more job."""
     sub = _pq_subvecs(corpus, m=m, dsub=dsub, id_col=id_col, vec_col=vec_col)
     if seed_ids is None:
         cent = (
@@ -2953,21 +2841,42 @@ def pq_codebooks(
             sub.filter(F.col(id_col).isin(sids))
             .select("j", cell_of.alias("cell"), F.col("sv").alias("cv"))
         )
-    for _ in range(lloyd_iters):
+    for i in range(lloyd_iters):
+        if i:  # cut between rounds; the caller collects the last one
+            cent = cent.transform(lineage_cut)
         assigned = _pq_assign_codes(sub, cent, keys=(id_col,))
-        means = (
-            assigned.select("j", "cell", F.posexplode("sv").alias("pos", "val"))
-            .groupBy("j", "cell", "pos")
-            .agg(decimal_avg(F.col("val").cast("double")).alias("m"))
-        )
-        cent = means.groupBy("j", "cell").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda x: x["m"],
-            ).alias("cv")
-        )
-        cent = cent.transform(lineage_cut)
+        cent = _centroid_mean(assigned, ("j", "cell"), "sv")
     return cent
+
+
+def _collect_codebooks(cb_df: DataFrame) -> list[tuple[int, int, list[float]]]:
+    """The (j, cell, cv) codebook rows of :func:`pq_codebooks`, collected
+    and sorted — m*k rows, an artifact, never corpus data. A NULL
+    centroid (only a NULL seed vector with no Lloyd round can make one)
+    is no codebook entry."""
+    return sorted(
+        (r["j"], r["cell"], [float(x) for x in r["cv"]])
+        for r in cb_df.collect()
+        if r["cv"] is not None
+    )
+
+
+def _pq_code_arrays(
+    sub: DataFrame, cent: DataFrame, keys: tuple[str, ...]
+) -> DataFrame:
+    """(*keys, pq_codes): each row's m codes (:func:`_pq_assign_codes`
+    over its :func:`_pq_subvecs` rows) regrouped into one array ordered
+    by subspace — the PQ payload every decode reads."""
+    return (
+        _pq_assign_codes(sub, cent, keys=keys)
+        .groupBy(*keys)
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("j", "cell"))),
+                lambda x: x["cell"],
+            ).alias("pq_codes")
+        )
+    )
 
 
 def cosine_topk_pq(
@@ -2986,80 +2895,36 @@ def cosine_topk_pq(
     than float32), queries stay exact, and each hit reports the ADC cosine
     next to the exact cosine and |error|.
 
-    Plan shape: codebooks broadcast everywhere they appear (m*k rows);
-    code assignment and reconstruction are broadcast joins over row-local
-    streams; the only corpus-keyed shuffle is the per-id regroup of m code
-    rows. Scoring reuses the broadcast-queries brute-force pattern."""
-    cent = pq_codebooks(
-        corpus, m=m, dsub=dsub, k=k, lloyd_iters=lloyd_iters,
-        id_col=id_col, vec_col=vec_col,
-    )
-    sub = _pq_subvecs(corpus, m=m, dsub=dsub, id_col=id_col, vec_col=vec_col)
-    codes = _pq_assign_codes(sub, cent, keys=(id_col,)).select(
-        id_col, "j", "cell"
-    )
-    recon = (
-        codes.join(F.broadcast(cent), ["j", "cell"])
-        .groupBy(id_col)
-        .agg(
-            F.flatten(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("j", "cv"))),
-                    lambda x: x["cv"],
-                )
-            ).alias("rv")
+    Plan shape: the codebooks (trained on the raw corpus by
+    :func:`pq_codebooks`, m*k rows) are collected into a frozen
+    :class:`Codec`; code assignment is a broadcast join over the
+    row-local subvector stream, the only corpus-keyed shuffle is the
+    per-id regroup of m codes, and reconstruction is the codec's
+    row-local decode (:meth:`Codec.view`) — the persisted index's rule.
+    Scoring reuses the broadcast-queries brute-force pattern."""
+    codebooks = _collect_codebooks(
+        pq_codebooks(
+            corpus, m=m, dsub=dsub, k=k, lloyd_iters=lloyd_iters,
+            id_col=id_col, vec_col=vec_col,
         )
     )
-    # Pair-independent norms precomputed before the scoring join (the
-    # semantic_dedup trick — same fold, bit-identical to inline cosine).
+    if not codebooks:  # no vector to train on: nothing to rank
+        return _no_error_rows(corpus.sparkSession, "pq")
+    codes = _pq_code_arrays(
+        _pq_subvecs(corpus, m=m, dsub=dsub, id_col=id_col, vec_col=vec_col),
+        _pq_codebook_df(corpus.sparkSession, codebooks),
+        keys=(id_col,),
+    )
+    # materialize (vector, reconstruction) once: both the query and
+    # corpus branches read it, and without a lineage cut the whole
+    # code-assign subtree runs twice (the semantic_dedup fix)
     v = (
         corpus.select(F.col(id_col), F.col(vec_col).alias("v"))
-        .join(recon, id_col)
-        .withColumn("vn", norm(F.col("v")))
-        .withColumn("rn", norm(F.col("rv")))
+        .join(codes, id_col)
+        .select(id_col, "v", Codec.pq(codebooks).view(vec_col, "rv"))
+        .transform(lineage_cut)
     )
-    # materialize (vector, reconstruction, norms) once: both the query and
-    # corpus branches read it, and without a lineage cut the whole
-    # codebook-train + assign subtree runs twice (the semantic_dedup fix)
-    v = v.transform(lineage_cut)
-    q = F.broadcast(
-        v.filter(F.col(id_col) < n_queries).select(
-            F.col(id_col).alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("vn").alias("qvn"),
-        )
-    )
-    c = v.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("v").alias("cv"),
-        F.col("rv").alias("crv"),
-        F.col("vn").alias("cvn"),
-        F.col("rn").alias("crn"),
-    )
-    cos_pq = F.try_divide(
-        dot(F.col("qv"), F.col("crv")), F.col("qvn") * F.col("crn")
-    )
-    cos_x = F.try_divide(
-        dot(F.col("qv"), F.col("cv")), F.col("qvn") * F.col("cvn")
-    )
-    scored = (
-        q.crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cos_pq, 6).alias("cos_pq"),
-            F.round(cos_x, 6).alias("cos_exact"),
-            F.round(F.abs(cos_pq - cos_x), 6).alias("abs_err"),
-        )
-    )
-    return topk_per_group(
-        scored,
-        ["query_id"],
-        [F.col("cos_pq").desc(), F.col("neighbor_id").asc()],
-        k=k_neighbors,
-        rank_col="rank",
-    ).select("query_id", "neighbor_id", "cos_pq", "cos_exact", "abs_err", "rank")
+    return _error_ranked(v, "pq", k_neighbors, n_queries, id_col)
 
 
 def _l2_sql(av: str, bv: str, dim: int) -> str:
@@ -3181,13 +3046,7 @@ def cosine_topk_ivfpq(
     touches."""
     corpus = drop_null_vectors(corpus, vec_col)
     spark = corpus.sparkSession
-    seeds = corpus.filter(F.col(id_col) < n_centroids).select(id_col, vec_col)
-    seed_rows = [(r[0], [float(x) for x in r[1]]) for r in seeds.collect()]
-    cent_rows = (
-        lloyd_refine_rows(corpus, seed_rows, n_iters=lloyd_iters, vec_col=vec_col)
-        if lloyd_iters > 0
-        else sorted(seed_rows)
-    )
+    cent_rows = _seed_centroids(corpus, n_centroids, lloyd_iters, id_col, vec_col)
     cent_df = F.broadcast(
         spark.createDataFrame(
             [(c, v) for c, v in cent_rows], "cell bigint, ccv array<double>"
@@ -3206,36 +3065,19 @@ def cosine_topk_ivfpq(
         )
         .transform(lineage_cut)
     )
-    cb = pq_codebooks(
-        resid.select("neighbor_id", "rv"),
-        m=m, dsub=dsub, k=pq_k, lloyd_iters=pq_iters,
-        id_col="neighbor_id", vec_col="rv",
-    ).select("j", F.col("cell").alias("code"), F.col("cv").alias("pcv"))
-    sub = _pq_subvecs(
-        resid.select("neighbor_id", "rv"), m=m, dsub=dsub,
-        id_col="neighbor_id", vec_col="rv",
-    )
-    # same argmin-as-aggregate shape as _pq_assign_codes (min over
-    # struct(_d, code) ≡ the old (_d asc, code asc) window, partial-
-    # aggregable map-side — k-fold fewer shuffled rows)
-    codes = (
-        sub.join(F.broadcast(cb), "j")
-        .withColumn("_d", _l2_sq(F.col("sv"), F.col("pcv")))
-        .groupBy("neighbor_id", "j")
-        .agg(F.min(F.struct("_d", "code")).alias("_w"))
-        .select("neighbor_id", "j", F.col("_w.code").alias("code"))
-    )
-    rrec = (
-        codes.join(F.broadcast(cb), ["j", "code"])
-        .groupBy("neighbor_id")
-        .agg(
-            F.flatten(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("j", "pcv"))),
-                    lambda x: x["pcv"],
-                )
-            ).alias("rr")
+    rv = resid.select("neighbor_id", "rv")
+    codebooks = _collect_codebooks(
+        pq_codebooks(
+            rv, m=m, dsub=dsub, k=pq_k, lloyd_iters=pq_iters,
+            id_col="neighbor_id", vec_col="rv",
         )
+    )
+    if not codebooks:  # no vector to index: nothing to rank
+        return _no_error_rows(spark, "ivfpq")
+    codes = _pq_code_arrays(
+        _pq_subvecs(rv, m=m, dsub=dsub, id_col="neighbor_id", vec_col="rv"),
+        _pq_codebook_df(spark, codebooks),
+        keys=("neighbor_id",),
     )
     # no cut: xhat has exactly ONE consumer (the probe join below) — a
     # materialization here was a full extra pass that bought nothing
@@ -3243,47 +3085,16 @@ def cosine_topk_ivfpq(
     # consumers)
     xhat = (
         resid.select("neighbor_id", "cell", "cv", "ccv")
-        .join(rrec, "neighbor_id")
-        .withColumn("xh", F.zip_with("ccv", "rr", lambda c, r: c + r))
-        .withColumn("xn", norm(F.col("xh")))
-        .withColumn("cn", norm(F.col("cv")))
+        .join(codes, "neighbor_id")
+        .withColumn("rr", Codec.pq(codebooks).view("rv", "rr"))
+        .withColumn("crv", F.zip_with("ccv", "rr", lambda c, r: c + r))
+        .withColumn("crn", norm(F.col("crv")))
+        .withColumn("cvn", norm(F.col("cv")))
     )
-    probes = ivf_assign_arrow(
-        corpus.filter(F.col(id_col) < n_queries).select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-        ),
-        cent_rows,
-        vec_col="qv",
-        n_best=n_probe,
-    ).withColumn("qn", norm(F.col("qv")))
-    cos_a = F.try_divide(
-        dot(F.col("qv"), F.col("xh")), F.col("qn") * F.col("xn")
-    )
-    cos_x = F.try_divide(
-        dot(F.col("qv"), F.col("cv")), F.col("qn") * F.col("cn")
-    )
-    scored = (
-        F.broadcast(probes)
-        .join(xhat, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cos_a, 6).alias("cos_ivfpq"),
-            F.round(cos_x, 6).alias("cos_exact"),
-            F.round(F.abs(cos_a - cos_x), 6).alias("abs_err"),
-        )
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    return topk_per_group(
-        scored,
-        ["query_id"],
-        [F.col("cos_ivfpq").desc(), F.col("neighbor_id").asc()],
-        k=k_neighbors,
-        rank_col="rank",
-    ).select(
-        "query_id", "neighbor_id", "cos_ivfpq", "cos_exact", "abs_err", "rank"
-    )
+    probes = _query_probes(
+        corpus.filter(F.col(id_col) < n_queries), cent_rows, n_probe, id_col, vec_col
+    ).withColumn("qvn", norm(F.col("qv")))
+    return _rank_topk(_probe_scored(probes, xhat, *_error_scores("ivfpq")), k_neighbors)
 
 
 def ivfpq_topk_oracle_sql(
@@ -3306,11 +3117,7 @@ def ivfpq_topk_oracle_sql(
     exponentially otherwise)."""
     cos_assign = _cos_sql("v.emb", "cent.cv")
     l2 = _l2_sql("s.sv", "cent.pcv", dsub)
-    ctes = [
-        f"""cent0 AS MATERIALIZED (
-        SELECT vec_id AS cell, embedding AS cv FROM {table}
-        WHERE vec_id < {n_centroids})"""
-    ]
+    ctes = [f"cent0 AS MATERIALIZED ({_seed_sql(table, 'vec_id', n_centroids)})"]
     for i in range(1, lloyd_iters + 1):
         ctes.append(f"""la{i} AS MATERIALIZED (
         SELECT * FROM (

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_pipelines_cu_spark.operators import cleaning, filters, joins, windows
@@ -134,6 +135,40 @@ def test_ivf_recall_vs_brute_force(spark, sf_dir):
     # seeds (they generally gain: cells cover the space instead of
     # clustering around whichever vectors had the lowest ids).
     assert refined >= recall(0) - 0.1
+
+
+@pytest.mark.parametrize("op", ["cosine_topk_ivf", "kmeans_clusters"])
+def test_seeds_are_lowest_ids_not_ids_below_n(spark, sf_dir, op):
+    """Centroid seeds are the n LOWEST-id vectors, not the ids below n:
+    with every id shifted by 100,000 no id is below n (the old rule
+    seeded nothing and the numpy assign kernel died on an empty centroid
+    matrix). The in-memory IVF and k-means must still run and match
+    their DuckDB oracles over the same shifted frame."""
+    import duckdb
+
+    from data_pipelines_cu_spark.operators import similarity as sim
+
+    from .util import assert_matches_oracle
+
+    shift = 100_000
+    src = f"{sf_dir}/embeddings.parquet"
+    em = spark.read.parquet(src).select(
+        (F.col("vec_id") + shift).alias("vec_id"), "embedding"
+    )
+    duck = duckdb.connect()
+    duck.sql(
+        f"CREATE VIEW embeddings AS SELECT vec_id + {shift} AS vec_id, "
+        f"embedding FROM '{src}'"
+    )
+    if op == "cosine_topk_ivf":
+        got = sim.cosine_topk_ivf(em, em.filter(F.col("vec_id") < shift + 3), k=2)
+        sql = sim.cosine_topk_ivf_oracle_sql(k=2, n_queries=shift + 3)
+    else:
+        got = sim.kmeans_clusters(em, n_clusters=4)
+        sql = sim.kmeans_clusters_oracle_sql(n_clusters=4)
+    assert got.count() > 0
+    assert_matches_oracle(got, duck, sql)
+    duck.close()
 
 
 def test_random_hyperplane_buckets_balanced(spark, sf_dir):

@@ -12,14 +12,11 @@ from .util import assert_matches_oracle
 QUERIES = all_queries()
 
 
-# The heaviest replays (quantized-ANN builds, the SemDeDup composite) go
-# to tier 2 (see pytest.ini): the driver-window run keeps the other ~195
-# replays; tier 2 still runs at round close and the driver's own
-# correctness gate samples 50 queries per round regardless.
+# The heaviest replay (the SemDeDup composite, whose recursive-CTE
+# oracle alone takes ~10 s) goes to tier 2 (see pytest.ini): the default
+# run keeps every other replay, including the quantized/IVF ANN twins;
+# tier 2 still runs at round close.
 _TIER2_REPLAYS = {
-    "ann_sq8_topk",
-    "ann_pq_topk",
-    "ann_ivf_topk",
     "semantic_dup_clusters",
 }
 
